@@ -1011,8 +1011,12 @@ object Dedup {
         coalesce(sum(col("__t") * col("__c")), lit(0L)).as("n_hit"))
     counts.crossJoin(shed)
       .select(col("n_truth"), col("n_candidates"), col("n_hit"),
-        (col("n_hit").cast("double") / col("n_candidates")).as("precision"),
-        (col("n_hit").cast("double") / col("n_truth")).as("recall"),
+        // NULL, not DIVIDE_BY_ZERO, on a corpus with no candidate or
+        // no truth pairs (the oracle SQL's NULLIF)
+        (col("n_hit").cast("double") / nullif(col("n_candidates"), lit(0L)))
+          .as("precision"),
+        (col("n_hit").cast("double") / nullif(col("n_truth"), lit(0L)))
+          .as("recall"),
         col("n_docs_shed"), col("n_pairs_shed"))
   }
 

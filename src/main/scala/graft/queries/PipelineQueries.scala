@@ -479,9 +479,9 @@ object PipelineQueries {
         |  CAST((SELECT COUNT(*) FROM cand) AS BIGINT) AS n_candidates,
         |  CAST((SELECT COUNT(*) FROM hit) AS BIGINT) AS n_hit,
         |  CAST((SELECT COUNT(*) FROM hit) AS DOUBLE)
-        |    / (SELECT COUNT(*) FROM cand) AS precision,
+        |    / NULLIF((SELECT COUNT(*) FROM cand), 0) AS precision,
         |  CAST((SELECT COUNT(*) FROM hit) AS DOUBLE)
-        |    / (SELECT COUNT(*) FROM truth) AS recall,
+        |    / NULLIF((SELECT COUNT(*) FROM truth), 0) AS recall,
         |  (SELECT n_docs_shed FROM shed) AS n_docs_shed,
         |  (SELECT n_pairs_shed FROM shed) AS n_pairs_shed""".stripMargin) {
       (s, dir) =>

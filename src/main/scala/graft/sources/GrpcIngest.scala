@@ -537,21 +537,24 @@ object GrpcIngest {
     * one `_seq` (the Debezium decoder's contract, so the same
     * `applyChanges`/`toDebezium` machinery applies downstream).
     * Pure column work (from_json + explode) — fully codegen'd,
-    * identical on the batch snapshot and the micro-batch stream.
+    * identical on the batch snapshot and the micro-batch stream. Each
+    * envelope is parsed ONCE, as `struct<schema, op, old, new>` with
+    * both images typed by `rowSchema`.
     */
   def changes(feed: DataFrame, schemaName: String,
       rowSchema: StructType): DataFrame = {
     val Op = graft.cdc.ChangeModel
+    val envelope = StructType(Seq(
+      StructField("schema", StringType), StructField("op", StringType),
+      StructField("old", rowSchema), StructField("new", rowSchema)))
     val env = feed.select(
         col("seq").as(Op.SeqCol),
-        get_json_object(col("value"), "$.schema").as("__schema"),
-        get_json_object(col("value"), "$.op").as("__op"),
-        from_json(get_json_object(col("value"), "$.old"), rowSchema).as("__old"),
-        from_json(get_json_object(col("value"), "$.new"), rowSchema).as("__new"))
-      .filter(col("__schema") === schemaName)
-    val images = env.select(col(Op.SeqCol), col("__op"), explode(array(
-        struct(lit(Op.UpdatePre).as("img"), col("__old").as("r")),
-        struct(lit(Op.UpdatePost).as("img"), col("__new").as("r")))).as("e"))
+        from_json(col("value"), envelope).as("__e"))
+      .filter(col("__e.schema") === schemaName)
+    val images = env.select(col(Op.SeqCol), col("__e.op").as("__op"),
+        explode(array(
+          struct(lit(Op.UpdatePre).as("img"), col("__e.old").as("r")),
+          struct(lit(Op.UpdatePost).as("img"), col("__e.new").as("r")))).as("e"))
       .select(col(Op.SeqCol), col("__op"), col("e.img").as("__img"),
         col("e.r").as("__r"))
     images

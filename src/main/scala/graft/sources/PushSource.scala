@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -218,13 +218,24 @@ private[sources] class PushScan(channel: String) extends Scan {
     * ADMISSION CONTROL: Spark commits batch N's source offsets only when
     * batch N+1 runs (MicroBatchExecution.cleanUpLastExecutedMicroBatch
     * commits `offsetLog.get(batchId - 1)`), and a batch only runs when it
-    * has data. If one batch could swallow the whole channel, a full
-    * channel whose events were all consumed-but-uncommitted would
+    * has data. If one batch could swallow a FULL channel, its events
+    * would all be consumed-but-uncommitted and the channel would
     * deadlock: producers blocked on space, space blocked on a commit,
-    * the commit blocked on a next batch that needs new data. Capping
-    * every batch at half the channel capacity guarantees a full channel
-    * always has uncommitted events BEYOND the last batch, so the next
-    * batch runs, commits its predecessor, and frees space.
+    * the commit blocked on a next batch that needs new data.
+    *
+    *  - Trigger.AvailableNow runs this stream (it does not implement
+    *    SupportsTriggerAvailableNow) as ONE batch and asks once, with
+    *    the committed start, for `ReadLimit.allAvailable`: the run
+    *    drains to the end captured at its start in a single micro-batch
+    *    (one decode, one sink merge). When that batch would take a full
+    *    channel it stops one event short, so the next run always has
+    *    data, commits this batch, and frees space. (Spark's opt-in
+    *    AvailableNow wrapper, `triggerAvailableNowWrapper.enabled`,
+    *    would pass the initial offset instead of the committed start;
+    *    leave it off for push channels.)
+    *  - Every other trigger caps each batch at half the channel
+    *    capacity (the default read limit), so a full channel always has
+    *    uncommitted events BEYOND the last batch and the next batch runs.
     */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new MicroBatchStream with SupportsAdmissionControl {
@@ -233,9 +244,16 @@ private[sources] class PushScan(channel: String) extends Scan {
       override def latestOffset(): Offset =
         throw new UnsupportedOperationException(
           "latestOffset(Offset, ReadLimit) should be called instead")
-      override def latestOffset(start: Offset, limit: ReadLimit): Offset =
-        PushOffset(math.min(PushBuffer.endOffset(channel),
-          start.asInstanceOf[PushOffset].seq + maxBatch))
+      override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+        val from = start.asInstanceOf[PushOffset].seq
+        val end = PushBuffer.endOffset(channel)
+        limit match {
+          case _: ReadAllAvailable =>
+            PushOffset(if (end - from >= PushBuffer.capacityOf(channel))
+              end - 1 else end)
+          case _ => PushOffset(math.min(end, from + maxBatch))
+        }
+      }
       override def reportLatestOffset(): Offset =
         PushOffset(PushBuffer.endOffset(channel))
       override def getDefaultReadLimit: ReadLimit =

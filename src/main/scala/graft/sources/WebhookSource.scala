@@ -134,7 +134,9 @@ object WebhookServer {
     * becomes the change op (POST→insert, PUT→update_postimage,
     * DELETE→delete — the reference's verb contract), `seq` becomes the
     * change sequence, and the `data` object lifts into columns via
-    * `from_json` with the caller's row schema. Pure column work, so it
+    * `from_json` with the caller's row schema. Each envelope is parsed
+    * ONCE, as `struct<verb, data: rowSchema>` — the decode is the
+    * per-change hot path of a catch-up run. Pure column work, so it
     * applies identically to the batch snapshot and the micro-batch
     * stream; feed the result straight into `ChangeModel.applyChanges`
     * or an upsert sink.
@@ -143,15 +145,17 @@ object WebhookServer {
       rowSchema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val Op = graft.cdc.ChangeModel
+    val envelope = StructType(Seq(
+      StructField("verb", StringType), StructField("data", rowSchema)))
     feed.select(
         col("seq").as(Op.SeqCol),
-        get_json_object(col("value"), "$.verb").as("__verb"),
-        from_json(get_json_object(col("value"), "$.data"), rowSchema).as("__r"))
+        from_json(col("value"), envelope).as("__e"))
       .select(
-        col("__r.*"),
-        when(col("__verb") === "PUT", Op.UpdatePost)
-          .when(col("__verb") === "DELETE", Op.Delete)
+        col("__e.data.*"),
+        when(col("__e.verb") === "PUT", Op.UpdatePost)
+          .when(col("__e.verb") === "DELETE", Op.Delete)
           .otherwise(Op.Insert).as(Op.OpCol),
         col(Op.SeqCol))
   }

@@ -1687,6 +1687,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(row.getDouble(3) > 0.0 && row.getDouble(3) <= 1.0)
   }
 
+  test("LSH eval harness: a corpus with no near-duplicates reports NULL " +
+      "precision and recall instead of dividing by zero") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    val docs = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta", "s1"),
+      (2L, "one two three four five six seven eight", "s1"),
+      (3L, "red orange yellow green blue indigo violet", "s1"),
+      (4L, "north south east west up down left right", "s2"))
+      .toDF("doc_id", "text", "source")
+    val row = Dedup.oracleLshEval(docs, "doc_id", "text", "source",
+      jaccardThreshold = 0.5).collect().head
+    assert(row.getAs[Long]("n_truth") == 0L, row.toString)
+    assert(row.getAs[Long]("n_candidates") == 0L, row.toString)
+    assert(row.getAs[Long]("n_hit") == 0L)
+    assert(row.isNullAt(row.fieldIndex("precision")))
+    assert(row.isNullAt(row.fieldIndex("recall")))
+  }
+
   test("quantized cell dedup: identical vectors in one cell collapse " +
       "to the lowest id; cross-cell twins both survive") {
     import spark.implicits._

@@ -1150,6 +1150,75 @@ class StreamingSpec extends AnyFunSuite {
     assert(seqs == (0L to 8L)) // no re-read, no loss across eviction
   }
 
+  /** One Trigger.AvailableNow run of the push channel `chan` into a
+    * parquet sink; returns the (start, end) source offsets of every
+    * micro-batch that read rows.
+    */
+  private def availableNowRun(chan: String, tmp: String): Seq[(Long, Long)] = {
+    val q = graft.sources.Sources.push(spark, chan)
+      .writeStream.format("parquet")
+      .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/cp")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(120000), "push stream timed out")
+    // a first batch has no start offset: it reads from the initial 0
+    def seq(o: String) = Option(o).fold(0L)(_.trim.toLong)
+    q.recentProgress.toSeq.filter(_.numInputRows > 0).map { p =>
+      (seq(p.sources.head.startOffset), seq(p.sources.head.endOffset))
+    }
+  }
+
+  test("AvailableNow drains a push backlog larger than capacity/2 in ONE " +
+      "micro-batch") {
+    import graft.sources.PushBuffer
+    val chan = "push_drain_one_batch"
+    PushBuffer.clear(chan)
+    PushBuffer.configure(chan, capacity = 10)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_drain").toString
+    val values = (0 until 8).map(i => s"""{"k":$i}""")
+    PushBuffer.pushAll(chan, values, waitMs = 0L)
+    // 8 retained > capacity/2 = 5: a capped batch would need two runs
+    val batches = availableNowRun(chan, tmp)
+    assert(batches == Seq((0L, 8L)), batches)
+    assert(batches.last._2 == PushBuffer.endOffset(chan))
+    val out = spark.read.parquet(s"$tmp/out").select("seq", "value")
+      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    assert(out == values.zipWithIndex.map { case (v, i) => (i.toLong, v) })
+  }
+
+  test("AvailableNow over a FULL push channel stops one event short; the " +
+      "next run commits, frees space, and a refused producer gets in") {
+    import graft.sources.PushBuffer
+    val chan = "push_drain_full"
+    PushBuffer.clear(chan)
+    PushBuffer.configure(chan, capacity = 8)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_full").toString
+    PushBuffer.pushAll(chan, (0 until 8).map(i => s"""{"k":$i}"""), waitMs = 0L)
+    assert(PushBuffer.retained(chan) == 8)
+    // run 1 takes capacity − 1: its batch stays uncommitted (Spark
+    // commits it when the next batch runs), so the channel stays full
+    assert(availableNowRun(chan, tmp) == Seq((0L, 7L)))
+    assert(PushBuffer.retained(chan) == 8)
+    assert(PushBuffer.tryPush(chan, Seq("""{"k":8}""")).isEmpty)
+    // a producer that blocks for space, released by run 2's commit
+    val pushed = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val producer = new Thread(() =>
+      pushed.set(PushBuffer.pushAll(chan, Seq("""{"k":8}"""), waitMs = 60000L)))
+    producer.start()
+    // run 2 still has the held-back event, so it runs, commits [0,7)
+    assert(availableNowRun(chan, tmp) == Seq((7L, 8L)))
+    producer.join(60000L)
+    assert(pushed.get() == 9L, "the blocked producer never got space")
+    // run 3 reads only the producer's event
+    assert(availableNowRun(chan, tmp) == Seq((8L, 9L)))
+    val seqs = spark.read.parquet(s"$tmp/out")
+      .select("seq").collect().map(_.getLong(0)).sorted.toSeq
+    assert(seqs == (0L to 8L)) // no loss, no duplicate
+    val ks = spark.read.parquet(s"$tmp/out")
+      .select(get_json_object(col("value"), "$.k").cast("long"))
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(ks == (0L to 8L))
+  }
+
   test("webhook edge returns 429 + Retry-After when the channel is full") {
     import graft.sources.{PushBuffer, WebhookServer}
     val chan = "webhook_429"
