@@ -1198,6 +1198,9 @@ object GraftApp {
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
     if (spark.conf.get(providerKey, hdfsDefault).endsWith("HDFSBackedStateStoreProvider"))
       spark.conf.set(providerKey, GraftSession.RocksDBProvider)
+    // every run's query clones the session: keep generated code on the
+    // executors' shared class loader so runs after the first reuse it
+    GraftSession.shareGeneratedCode(spark)
     registerUdfs(spark, config)
     val runner = new GraftSqlRunner(spark, streaming = true)
     config.sources.foreach { s =>

@@ -31,13 +31,18 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // Whole-stage-codegen class cache (STATIC conf — must be set at
-      // session creation). The default 100 entries thrashes under an
-      // engine with hundreds of distinct operators: thread dumps under
-      // the lake-mutation rigs showed every active task queued on
-      // CodeGenerator.compile re-compiling evicted units (r20; q148
-      // 4.9→3.8 s/run from this alone). Per-JVM cost is bounded (a
-      // compiled unit is KBs); core-count independent, applies to any
-      // executor JVM at scale.
+      // session creation). Spark 4.1 keys the cache by (task context
+      // class loader, code), and with per-session artifact isolation
+      // each cloned session (one per streaming query) ran on its own
+      // executor class loader, so the same unit took one entry per
+      // loader. Those per-session loaders multiplied the entries behind
+      // r20's compile storms (every active task queued on
+      // CodeGenerator.compile under the lake-mutation rigs; q148
+      // 4.9→3.8 s/run from this alone), not eviction of distinct code
+      // alone. With one loader per executor ([[shareGeneratedCode]])
+      // each distinct unit takes one entry; the larger cache still holds
+      // an engine with hundreds of distinct operators. A compiled unit
+      // is KBs, so the per-JVM cost is bounded at any core count.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       // Older testdata generations stored events.ts as TIMESTAMP(NANOS);
       // under this flag Spark reads those as LongType and Tables.load
@@ -58,12 +63,46 @@ object GraftSession {
     configure(spark)
   }
 
+  /** Session-level artifact isolation (Spark 4.1 default `true`). */
+  val ArtifactIsolationKey: String = "spark.sql.artifact.isolation.enabled"
+
+  /** Runs every query of the session — and of the sessions Spark clones
+    * from it, one per streaming query — on the executors' one shared
+    * class loader, so generated code compiles once per executor JVM and
+    * stays JIT-warm across pipeline runs.
+    *
+    * Spark 4.1's default artifact isolation gives each cloned session
+    * its own executor class loader, and the codegen cache is keyed by
+    * (context class loader, code): every `GraftApp.runStreaming` run
+    * recompiled all its generated classes (34 for the webhook →
+    * upsert-Delta pipeline) and ran them JIT-cold, with Janino's type
+    * lookups going through that loader. Read when a query starts, so
+    * setting it before the first query start covers every clone.
+    *
+    * Trade-off: artifacts a user adds to a session (`addArtifact`,
+    * `addJar`) become application-wide instead of session-scoped. The
+    * engine adds none. An explicit value for the key wins.
+    */
+  def shareGeneratedCode(spark: SparkSession): Unit =
+    setUnlessExplicit(spark, ArtifactIsolationKey, "false")
+
+  /** Sets `key` unless the operator set it: `spark.conf.getAll` holds only
+    * explicitly set keys (`SparkSession.builder().config`, `--conf`, `-D`
+    * and runtime sets), never Spark's own defaults.
+    */
+  private def setUnlessExplicit(spark: SparkSession, key: String,
+      value: String): Unit =
+    if (!spark.conf.getAll.contains(key)) spark.conf.set(key, value)
+
   /** Spark's bundled RocksDB state store provider (SCALE.md contract). */
   val RocksDBProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Idempotently registers the engine's SQL surface on an existing session
     * (used by Verify/Bench, which build their own sessions, and by tests).
+    * Engine defaults it applies yield to an operator's explicit value
+    * (`SparkSession.builder().config`, `--conf`, `-D`, or an earlier
+    * `spark.conf.set`).
     */
   def configure(spark: SparkSession): SparkSession = {
     // Spark 4.1 writes a checksum sidecar for EVERY checkpoint file and
@@ -75,11 +114,12 @@ object GraftSession {
     // is replay/CDC rigs whose checkpoints are written and consumed
     // within one job (AvailableNow), so corruption would surface as a
     // same-run read failure anyway; measured interleaved A/B (r20):
-    // q151 8.8→6.5 s/run, q140 9.3→6.4 s/run. Set post-build so an
-    // operator can still override it for long-lived checkpoints on
-    // object storage (set it AFTER configure()).
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-      "false")
+    // q151 8.8→6.5 s/run, q140 9.3→6.4 s/run. An operator who wants
+    // checksums on long-lived checkpoints (object storage) sets the key
+    // to true; that value is kept.
+    setUnlessExplicit(spark,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+    shareGeneratedCode(spark)
     graft.functions.GraftFunctions.registerAll(spark)
     // same rule the extension injects, for sessions built without
     // spark.sql.extensions (Verify/Bench/tests)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Vector similarity search over an embedding column (`Array[Float]`).
   *
@@ -28,7 +29,7 @@ object Similarity {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val planned =
       try df.rdd.getNumPartitions
-      catch { case _: Throwable => 1 }
+      catch { case NonFatal(_) => 1 }
     if (planned >= cores) df else df.repartition(cores)
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import scala.util.control.NonFatal
 
 /** One driver-checkable query: a DataFrame program plus (optionally) the
   * equivalent ANSI SQL the driver replays in DuckDB.
@@ -51,7 +52,7 @@ object Q {
     val cores = s.sparkContext.defaultParallelism
     val planned =
       try df.rdd.getNumPartitions
-      catch { case _: Throwable => 1 }
+      catch { case NonFatal(_) => 1 }
     if (planned >= cores) df else df.repartition(cores)
   }
 

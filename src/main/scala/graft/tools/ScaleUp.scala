@@ -59,6 +59,7 @@ object ScaleUp {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.GraftSession.configure(spark)
 
     /** One power-of-ten offset covering every value of `key` in df. */
     def offsetFor(df: DataFrame, key: String): Long = {

@@ -1244,6 +1244,80 @@ class StreamingSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("configure() applies engine defaults only to keys the operator " +
+      "left unset") {
+    val keys = Seq("spark.sql.streaming.checkpoint.fileChecksum.enabled",
+      GraftSession.ArtifactIsolationKey)
+    val fresh = GraftSession.configure(spark.newSession())
+    keys.foreach(k => assert(fresh.conf.get(k) == "false", k))
+    val explicit = spark.newSession()
+    keys.foreach(explicit.conf.set(_, "true"))
+    GraftSession.configure(explicit)
+    keys.foreach(k => assert(explicit.conf.get(k) == "true", k))
+  }
+
+  test("pipeline runs after the first reuse generated code: no codegen " +
+      "compiles on warm runs of a webhook -> upsert-Delta pipeline") {
+    import graft.sources.{DeltaLite, PushBuffer}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val chan = "warm_codegen"
+    PushBuffer.clear(chan)
+    val root = java.nio.file.Files.createTempDirectory("graft_warm").toString
+    val config = GraftConfigLoader.fromYaml(
+      s"""sources:
+         |  - name: changes
+         |    path: ""
+         |    decode: webhook
+         |    schema: "id BIGINT, version BIGINT, amount DOUBLE, tag STRING"
+         |    options:
+         |      channel: $chan
+         |sql: |
+         |  SELECT id, version, amount, tag, _op, _seq INTO accounts FROM changes;
+         |sinks:
+         |  - table: accounts
+         |    path: $root/accounts
+         |    format: delta
+         |    mode: upsert
+         |    keys: [id]
+         |streaming: true
+         |""".stripMargin)
+    GraftApp.build(spark, config)
+    val expected = scala.collection.mutable.Map.empty[Long, (Long, Double, String)]
+    def env(verb: String, data: String) = s"""{"verb":"$verb","data":$data}"""
+    def row(id: Long, v: Long) = {
+      expected(id) = (v, id * 1.5 + v, s"t$v")
+      s"""{"id":$id,"version":$v,"amount":${id * 1.5 + v},"tag":"t$v"}"""
+    }
+    // run r inserts ten keys (one updated again in the same batch),
+    // updates half of run r-1's keys and deletes one of them
+    def run(r: Int): Long = {
+      val base = r * 10L
+      val envs = (base until base + 10).map(k => env("POST", row(k, r))) ++
+        Seq(env("PUT", row(base, r + 100))) ++
+        (if (r == 1) Nil
+         else (base - 10 until base - 5).map(k => env("PUT", row(k, r))) ++
+           Seq({ expected -= base - 1; env("DELETE", s"""{"id":${base - 1}}""") }))
+      PushBuffer.pushAll(chan, envs, waitMs = 0L)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val qs = GraftApp.runStreaming(spark, config)
+      try qs.foreach(_.awaitTermination()) finally qs.foreach(_.stop())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    def sink() = DeltaLite.read(spark, s"$root/accounts")
+      .select("id", "version", "amount", "tag").collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getString(3))))
+      .toMap
+    try {
+      run(1); run(2) // warm-up: the first runs compile the pipeline's code
+      assert(sink() == expected.toMap)
+      for (r <- 3 to 4) {
+        val compiled = run(r)
+        assert(compiled == 0, s"run $r compiled $compiled generated classes")
+        assert(sink() == expected.toMap, s"sink after run $r")
+      }
+    } finally PushBuffer.clear(chan)
+  }
+
   test("stateful query runs on the RocksDB state store (SCALE.md contract)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
