@@ -175,23 +175,8 @@ object GraftApp {
               (!config.streaming && sink.mode == "overwrite"))))
         // delta/iceberg batch commits are native — no jar probe
         requireFormatAvailable(spark, sink.format, "sink")
-      if (sink.mode == "upsert") {
-        require(sink.keys.nonEmpty, s"upsert sink '${sink.table}' needs keys")
-        // parquet upserts use the crash-safe snapshot swap; delta
-        // upserts commit natively as copy-on-write MERGE (only files
-        // holding touched keys are rewritten — DeltaLite.upsert);
-        // iceberg upserts commit natively as merge-on-read (position
-        // deletes + batch data in one snapshot — IcebergLite.upsert)
-        require(sink.format == "parquet" || sink.format == "delta" ||
-          sink.format == "iceberg",
-          s"upsert sink '${sink.table}' supports formats " +
-            s"parquet|delta|iceberg (got '${sink.format}')")
-        require((sink.format != "delta" && sink.format != "iceberg") ||
-          sink.buckets.isEmpty,
-          s"upsert sink '${sink.table}': buckets: is the parquet " +
-            s"snapshot's layout knob; ${sink.format} bounds churn " +
-            "through its own metadata instead")
-      }
+      // keys, format and `buckets:` — the same check run makes
+      if (sink.mode == "upsert") keyedTarget(sink)
       // partition_by legality + column existence (run would fail at
       // write time with a deep AnalysisException; surface it here)
       if (sink.partitionBy.nonEmpty) {
@@ -878,6 +863,47 @@ object GraftApp {
     } else raw
   }
 
+  /** Where a keyed sink (`mode: upsert`, or `mode: jdbc` with keys)
+    * merges — one mapping for build, batch and streaming runs, which
+    * all hand it to [[graft.sinks.Sinks.upsertBatch]]. Parquet upserts
+    * keep the crash-safe bucketed snapshot (no `buckets:` = one bucket,
+    * the layout either run mode maintains, so a stream can take over a
+    * batch-written snapshot); delta commits a native copy-on-write
+    * MERGE (only files holding touched keys are rewritten); iceberg a
+    * native merge-on-read snapshot (position deletes + batch data).
+    */
+  private[graft] def keyedTarget(sink: SinkConf): graft.sinks.Sinks.Target = {
+    import graft.sinks.Sinks
+    require(sink.keys.nonEmpty,
+      s"${sink.mode} sink '${sink.table}' needs keys (the merge key)")
+    if (sink.mode == "jdbc")
+      Sinks.Jdbc(sink.options("url"), sink.options("dbtable"), jdbcProps(sink))
+    else {
+      require(sink.format == "parquet" || sink.buckets.isEmpty,
+        s"upsert sink '${sink.table}': buckets: is the parquet " +
+          s"snapshot's layout knob; ${sink.format} bounds churn " +
+          "through its own metadata instead")
+      sink.format match {
+        case "delta" => Sinks.Delta(sink.path, deltaTableProps(sink))
+        case "iceberg" => Sinks.Iceberg(sink.path)
+        case "parquet" =>
+          Sinks.BucketedParquet(sink.path, sink.buckets.getOrElse(1))
+        case other => throw new IllegalArgumentException(
+          s"upsert sink '${sink.table}' supports formats " +
+            s"parquet|delta|iceberg (got '$other')")
+      }
+    }
+  }
+
+  /** JDBC connection properties: every sink option but the target. */
+  private def jdbcProps(sink: SinkConf): java.util.Properties = {
+    val props = new java.util.Properties
+    sink.options.foreach { case (k, v) =>
+      if (k != "url" && k != "dbtable") props.setProperty(k, v)
+    }
+    props
+  }
+
   /** CREATION-time table properties of a native delta sink:
     * `options.enable_change_data_feed: true` (sugar for
     * delta.enableChangeDataFeed) plus every `options.property.<key>`
@@ -966,10 +992,6 @@ object GraftApp {
       // instead of silently dropping it
       require(sink.partitionBy.isEmpty || sink.mode != "upsert",
         s"partition_by is not supported on upsert sinks (sink '${sink.table}')")
-      require(sink.mode != "upsert" ||
-        sink.format == "parquet" || sink.format == "delta" ||
-        sink.format == "iceberg",
-        s"upsert sink '${sink.table}' supports formats parquet|delta|iceberg")
       // zorder_by: cluster the batch write on the Morton key of 2-3
       // dimension columns so every file's min/max statistics prune
       // scans on ANY of them (operators.Layout); orthogonal to
@@ -1056,65 +1078,11 @@ object GraftApp {
         case "dummy" =>
           // reference Dummy sink (sink.rs:127-129): consume, write nothing
           println(s"[graft] dummy sink '${sink.table}': ${df.count()} rows")
-        case "jdbc" =>
-          val url = sink.options("url")
-          val props = new java.util.Properties
-          sink.options.foreach { case (k, v) =>
-            if (k != "url" && k != "dbtable") props.setProperty(k, v)
-          }
-          if (sink.keys.nonEmpty)
-            graft.sinks.Sinks.upsertJdbcRowsBatch(
-              df, sink.keys, url, sink.options("dbtable"), props)
-          else
-            df.write.mode("append").jdbc(url, sink.options("dbtable"), props)
-        case "upsert" =>
-          // batch upsert = latest image per key over existing + new
-          val merged = graft.cdc.ChangeModel.applyChanges(
-            df.withColumn(graft.cdc.ChangeModel.OpCol,
-              org.apache.spark.sql.functions.lit(graft.cdc.ChangeModel.Insert))
-              .withColumn(graft.cdc.ChangeModel.SeqCol,
-                org.apache.spark.sql.functions.monotonically_increasing_id()),
-            sink.keys)
-          if (sink.format == "delta") {
-            // native copy-on-write MERGE: rewrites only the table files
-            // holding batch keys (per-file stats pruning), one atomic
-            // Delta commit — no jar needed. A first-run upsert CREATES
-            // the table, so CDF stamping happens here too.
-            val logDir = new org.apache.hadoop.fs.Path(sink.path,
-              "_delta_log")
-            val tconf = deltaTableProps(sink)
-            if (tconf.nonEmpty && !logDir.getFileSystem(
-                spark.sparkContext.hadoopConfiguration).exists(logDir))
-              graft.sources.DeltaLite.write(spark, merged, sink.path,
-                configuration = tconf)
-            else
-              graft.sources.DeltaLite.upsert(spark, merged, sink.path,
-                sink.keys)
-          } else if (sink.format == "iceberg") {
-            // native merge-on-read MERGE: one atomic snapshot holding a
-            // position-delete manifest for touched keys plus the batch
-            // as a data manifest — zero data-file rewrites
-            val metaDir = new org.apache.hadoop.fs.Path(sink.path, "metadata")
-            if (!metaDir.getFileSystem(
-                spark.sparkContext.hadoopConfiguration).exists(metaDir))
-              graft.sources.IcebergLite.write(spark, merged, sink.path)
-            else graft.sources.IcebergLite.upsert(
-              spark, merged, sink.path, sink.keys)
-            ()
-          } else
-          // always the hash-bucketed layout the streaming sink
-          // maintains (no `buckets:` = one bucket), so a later stream
-          // can take over the snapshot without a layout migration and
-          // bucket-pruned readers work identically
-          locally {
-            import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-            val n = sink.buckets.getOrElse(1)
-            merged
-              .withColumn("_bucket",
-                pmod(xxhash64(sink.keys.map(col): _*), lit(n)).cast("int"))
-              .write.mode("overwrite").partitionBy("_bucket")
-              .parquet(sink.path)
-          }
+        case "jdbc" if sink.keys.isEmpty =>
+          df.write.mode("append")
+            .jdbc(sink.options("url"), sink.options("dbtable"), jdbcProps(sink))
+        case "jdbc" | "upsert" =>
+          graft.sinks.Sinks.upsertBatch(df, sink.keys, keyedTarget(sink))
         case other => throw new IllegalArgumentException(s"unknown sink mode $other")
       }
     }
@@ -1215,18 +1183,15 @@ object GraftApp {
       val ckpt = sink.checkpoint.getOrElse(sink.path + "_ckpt")
       if (sink.mode == "jdbc") requireJdbcAvailable(sink)
       else if (sink.mode != "dummy" &&
-          !(sink.format == "delta" &&
+          !((sink.format == "delta" || sink.format == "iceberg") &&
             (sink.mode == "append" || sink.mode == "upsert")))
-        // streaming delta APPEND/UPSERT commit natively with the txn
-        // exactly-once protocol; other delta modes keep the jar probe
+        // streaming delta/iceberg APPEND/UPSERT commit natively with the
+        // txn exactly-once protocol; other modes keep the jar probe
         requireFormatAvailable(spark, sink.format, "sink")
-      // upsert snapshots own their layout (flat or key-hash buckets) —
+      // keyed sinks own their layout (key-hash buckets, table files) —
       // a user partition spec would be silently unhonored, so reject it
       require(sink.partitionBy.isEmpty || sink.mode == "append",
         s"partition_by is only supported on append sinks (sink '${sink.table}')")
-      require(sink.mode != "upsert" ||
-        sink.format == "parquet" || sink.format == "delta",
-        s"upsert sink '${sink.table}' supports formats parquet|delta")
       // streaming queries carry the sink table as their name so
       // listener progress / the /metrics endpoint label per sink
       val qn = Some(sink.table)
@@ -1250,26 +1215,15 @@ object GraftApp {
         case "append" => graft.sinks.Sinks.appendParquet(
           df, sink.path, ckpt, sink.partitionBy, sink.format, sink.options,
           queryName = qn)
-        case "upsert" if sink.format == "delta" =>
-          // native copy-on-write MERGE per micro-batch: terminal images
-          // replace, terminal deletes remove, only key-touched files
-          // rewrite; the txn protocol de-dups retried batches
-          graft.sinks.Sinks.upsertDelta(df, sink.keys, sink.path, ckpt,
-            appId = s"graft-${sink.table}", queryName = qn)
-        case "upsert" if sink.format == "iceberg" =>
-          // native merge-on-read MERGE per micro-batch: one snapshot
-          // holds the position deletes + batch data; the summary
-          // watermark de-dups retried batches
-          graft.sinks.Sinks.upsertIceberg(df, sink.keys, sink.path, ckpt,
-            appId = s"graft-${sink.table}", queryName = qn)
-        case "upsert" => sink.buckets match {
-          // buckets: opts into the O(batch)-per-microbatch bucketed
-          // snapshot — the right choice once state outgrows one rewrite
-          case Some(n) => graft.sinks.Sinks.upsertParquetBucketed(
-            df, sink.keys, sink.path, ckpt, numBuckets = n, queryName = qn)
-          case None => graft.sinks.Sinks.upsertParquet(
-            df, sink.keys, sink.path, ckpt, queryName = qn)
-        }
+        case "upsert" | "jdbc" =>
+          // keyed sinks: one collapse → merge body per micro-batch; the
+          // txn app id lets delta/iceberg skip a retried batch
+          val kckpt =
+            if (sink.mode == "upsert") ckpt
+            else sink.checkpoint.getOrElse(throw new IllegalArgumentException(
+              s"streaming jdbc sink '${sink.table}' needs a checkpoint for exactly-once resume"))
+          graft.sinks.Sinks.upsert(df, sink.keys, keyedTarget(sink), kckpt,
+            appId = Some(s"graft-${sink.table}"), queryName = qn)
         case "dummy" =>
           // consume + count per microbatch; a throwaway checkpoint is
           // fine — the dummy sink has no state worth resuming
@@ -1284,18 +1238,6 @@ object GraftApp {
               println(s"[graft] dummy sink '${sink.table}' batch $id: ${b.count()} rows")
             }
             .start()
-        case "jdbc" =>
-          require(sink.keys.nonEmpty,
-            s"streaming jdbc sink '${sink.table}' needs keys (the merge key)")
-          val jckpt = sink.checkpoint.getOrElse(throw new IllegalArgumentException(
-            s"streaming jdbc sink '${sink.table}' needs a checkpoint for exactly-once resume"))
-          val props = new java.util.Properties
-          sink.options.foreach { case (k, v) =>
-            if (k != "url" && k != "dbtable") props.setProperty(k, v)
-          }
-          graft.sinks.Sinks.upsertJdbcRows(
-            df, sink.keys, sink.options("url"), sink.options("dbtable"),
-            jckpt, props, queryName = qn)
         case other    => throw new IllegalArgumentException(s"unknown streaming sink mode $other")
       }
     }

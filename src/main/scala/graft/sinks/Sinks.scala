@@ -6,10 +6,24 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 /** Sinks (SURVEY §2.2). Dozer's `Sink` trait batches rows and flushes
   * on epoch commit with resume bookkeeping (dozer-core/src/node.rs:
   * 111-147); Spark's exactly-once equivalent is checkpointed
-  * `writeStream` — `foreachBatch` is the upsert path (ClickHouse
-  * ReplacingMergeTree analogue), append parquet the immutable-log path.
+  * `writeStream` — `foreachBatch` is the keyed path, append parquet the
+  * immutable-log path.
+  *
+  * Every keyed sink — Delta, Iceberg, bucketed parquet, JDBC; streaming
+  * and batch — runs ONE body, [[upsertBatch]]: the primary-key record
+  * writer contract (dozer-core/src/record_store.rs:48-87), one final row
+  * per key with deletes applied. Its contract:
+  *   - order within a batch comes from `_seq` (CDC input carries
+  *     `_op`/`_seq`; plain rows are inserts in arrival order);
+  *   - order across batches is arrival order: a later batch's final row
+  *     for a key replaces the earlier one;
+  *   - an empty batch commits nothing.
+  * The [[Target]] only merges the collapsed batch — terminal images
+  * replace or insert, terminal delete keys remove — so each format
+  * keeps its own commit protocol and nothing else.
   */
 object Sinks {
+  import graft.cdc.ChangeModel
 
   /** Label the streaming query (surfaces in StreamingQueryListener
     * progress and the /metrics endpoint as `query="<name>"`).
@@ -64,49 +78,6 @@ object Sinks {
       }
       .start()
 
-  /** Streaming keyed UPSERT into a NATIVE Delta table: each micro-batch
-    * collapses to one FINAL row per key (`ChangeModel.latestRows`, CDC
-    * `_op`/`_seq` respected when present) and merges copy-on-write in
-    * one atomic Delta commit — terminal images replace/insert, terminal
-    * deletes remove the key (MERGE's WHEN MATCHED DELETE), and only the
-    * table files holding touched keys are rewritten, located through
-    * the per-file stats index. The same `txn` idempotence protocol as
-    * [[appendDelta]] makes retried batches exactly-once.
-    */
-  def upsertDelta(changes: DataFrame, keyCols: Seq[String],
-      tablePath: String, checkpoint: String, appId: String,
-      queryName: Option[String] = None): StreamingQuery =
-    named(changes.writeStream, queryName)
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions.{col, lit,
-          monotonically_increasing_id}
-        val Op = graft.cdc.ChangeModel.OpCol
-        val asChanges =
-          if (batch0.columns.contains(Op)) batch0
-          else batch0
-            .withColumn(Op, lit(graft.cdc.ChangeModel.Insert))
-            .withColumn(graft.cdc.ChangeModel.SeqCol,
-              monotonically_increasing_id())
-        val latest = graft.cdc.ChangeModel.latestRows(asChanges, keyCols)
-          .localCheckpoint() // one row per key, reused for both splits
-        val images = latest
-          .filter(col(Op) === graft.cdc.ChangeModel.Insert)
-          .drop(Op, graft.cdc.ChangeModel.SeqCol)
-        val dels = latest
-          .filter(col(Op) === graft.cdc.ChangeModel.Delete)
-          .select(keyCols.map(col): _*)
-        // an empty first micro-batch must not try to create the table
-        if (!latest.isEmpty)
-          graft.sources.DeltaLite.upsert(batch0.sparkSession, images,
-            tablePath, keyCols, txn = Some((appId, batchId)),
-            deleteKeys = Some(dels))
-        ()
-      }
-      .start()
-
   /** Streaming append into a NATIVE Iceberg table — [[appendDelta]]'s
     * twin: each micro-batch commits one snapshot whose summary carries
     * the `graft-txn-app`/`graft-txn-version` watermark, so a RETRIED
@@ -126,364 +97,280 @@ object Sinks {
       }
       .start()
 
-  /** Streaming keyed UPSERT into a NATIVE Iceberg table — the
-    * merge-on-read twin of [[upsertDelta]]: per micro-batch, one final
-    * row per key; terminal images replace/insert, terminal deletes
-    * remove, all in ONE snapshot whose position-delete manifest
-    * suppresses the touched keys (no data file rewritten, candidate
-    * files pruned by manifest column bounds). Same summary-watermark
-    * idempotence as [[appendIceberg]].
+  /** Where a keyed sink lands. [[merge]] receives one collapsed batch:
+    * `images` (payload columns, one row per key) to replace or insert,
+    * and `deleteKeys` (key columns, disjoint from the images' keys) to
+    * remove. A missing table is created by the first merge.
+    * `txn` = (stable per-sink app id, batch id) for the formats whose
+    * log records it, so a retried batch is skipped by the table itself;
+    * the others merge idempotently (replace-by-key re-applied converges).
     */
-  def upsertIceberg(changes: DataFrame, keyCols: Seq[String],
-      tablePath: String, checkpoint: String, appId: String,
-      queryName: Option[String] = None): StreamingQuery =
-    named(changes.writeStream, queryName)
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions.{col, lit,
-          monotonically_increasing_id}
-        val Op = graft.cdc.ChangeModel.OpCol
-        val asChanges =
-          if (batch0.columns.contains(Op)) batch0
-          else batch0
-            .withColumn(Op, lit(graft.cdc.ChangeModel.Insert))
-            .withColumn(graft.cdc.ChangeModel.SeqCol,
-              monotonically_increasing_id())
-        val latest = graft.cdc.ChangeModel.latestRows(asChanges, keyCols)
-          .localCheckpoint()
-        val images = latest
-          .filter(col(Op) === graft.cdc.ChangeModel.Insert)
-          .drop(Op, graft.cdc.ChangeModel.SeqCol)
-        val dels = latest
-          .filter(col(Op) === graft.cdc.ChangeModel.Delete)
-          .select(keyCols.map(col): _*)
-        if (!latest.isEmpty) {
-          val spark = batch0.sparkSession
-          val metaDir = new org.apache.hadoop.fs.Path(tablePath, "metadata")
-          if (!metaDir.getFileSystem(
-              spark.sparkContext.hadoopConfiguration).exists(metaDir))
-            graft.sources.IcebergLite.write(spark, images, tablePath,
-              txn = Some((appId, batchId)))
-          else graft.sources.IcebergLite.upsert(spark, images, tablePath,
-            keyCols, deleteKeys = Some(dels), txn = Some((appId, batchId)))
-        }
-        ()
-      }
-      .start()
+  sealed trait Target {
+    def merge(spark: SparkSession, images: DataFrame, deleteKeys: DataFrame,
+        keyCols: Seq[String], txn: Option[(String, Long)]): Unit
+  }
 
-  /** Keyed upsert sink: every microbatch merges the batch's changes
-    * into a keyed parquet snapshot via latest-by-key reduction — the
-    * PrimaryKeyLookupRecordWriter semantics (record_store.rs:48-87).
-    *
-    * ONE implementation: this is [[upsertParquetBucketed]] with a
-    * single bucket — whole-snapshot rewrite per microbatch, the right
-    * shape only while total state is small. Once state outgrows one
-    * task's comfortable rewrite, call the bucketed variant directly
-    * (or set `buckets:` in config) — same layout family, same
-    * crash-safety dance, O(touched buckets) per batch instead of
-    * O(total state).
-    *
-    * Implementation note: without a transactional table format the
-    * merge is read-union-rewrite of the touched buckets; on a real
-    * deployment swap the body for Delta `MERGE INTO` / JDBC upsert
-    * keyed on the schema PK. State per key stays bounded: one row.
+  /** Native Delta copy-on-write MERGE ([[graft.sources.DeltaLite.upsert]]):
+    * only files holding touched keys are rewritten, in one atomic commit.
+    * `configuration` is stamped when the first merge creates the table
+    * (delta.enableChangeDataFeed, delta.constraints.*, …).
     */
-  def upsertParquet(changes: DataFrame, keyCols: Seq[String], statePath: String,
-      checkpoint: String, queryName: Option[String] = None): StreamingQuery =
-    upsertParquetBucketed(changes, keyCols, statePath, checkpoint,
-      numBuckets = 1, queryName = queryName)
+  final case class Delta(path: String,
+      configuration: Map[String, String] = Map.empty) extends Target {
+    def merge(spark: SparkSession, images: DataFrame, deleteKeys: DataFrame,
+        keyCols: Seq[String], txn: Option[(String, Long)]): Unit = {
+      graft.sources.DeltaLite.upsert(spark, images, path, keyCols, txn = txn,
+        deleteKeys = Some(deleteKeys), configuration = configuration)
+      ()
+    }
+  }
 
-  /** Scale path of [[upsertParquet]]: the snapshot is hash-bucketed by
-    * key into `numBuckets` partition directories (`_bucket=<i>/`), and
-    * each microbatch reads+rewrites ONLY the buckets its keys touch —
-    * O(batch ∕ bucket-spread × bucket size) per batch instead of
-    * O(total state). Pick `numBuckets` so one bucket (state ∕
-    * numBuckets) is a comfortable task read — e.g. 4096 buckets for a
-    * TB-scale keyset.
+  /** Native Iceberg merge-on-read MERGE ([[graft.sources.IcebergLite.upsert]]):
+    * one snapshot holds the position deletes for touched keys plus the
+    * images as new data files; no data file is rewritten.
+    */
+  final case class Iceberg(path: String) extends Target {
+    def merge(spark: SparkSession, images: DataFrame, deleteKeys: DataFrame,
+        keyCols: Seq[String], txn: Option[(String, Long)]): Unit = {
+      graft.sources.IcebergLite.upsert(spark, images, path, keyCols,
+        deleteKeys = Some(deleteKeys), txn = txn)
+      ()
+    }
+  }
+
+  /** Keyed parquet snapshot, hash-bucketed by key into `numBuckets`
+    * partition directories (`_bucket=<i>/`). Each merge reads and
+    * rewrites ONLY the buckets its keys touch: (existing rows of those
+    * buckets without the batch's keys) ∪ images — O(batch ∕ bucket-spread
+    * × bucket size) instead of O(total state). One bucket is a
+    * whole-snapshot rewrite, the right shape only while state is small;
+    * pick `numBuckets` so one bucket (state ∕ numBuckets) is a
+    * comfortable task read — e.g. 4096 buckets for a TB-scale keyset.
     *
-    * Crash safety: per-bucket demote-promote swap (same dance as
-    * [[upsertParquet]]) against a sibling `<statePath>_bak` root; a
-    * crash mid-batch leaves every bucket readable from either live or
-    * backup, and the foreachBatch retry re-merges idempotently
-    * (latest-by-key is stable under re-application). Untouched bucket
-    * directories are never opened, let alone rewritten.
+    * Crash safety: per-bucket demote-promote swap against a sibling
+    * `<path>_bak` root; a crash mid-batch leaves every bucket readable
+    * from either live or backup, and the foreachBatch retry re-merges
+    * idempotently (replace-by-key is stable under re-application).
+    * Untouched bucket directories are never opened, let alone rewritten.
     *
-    * Readers: `spark.read.parquet(statePath)` — the `_bucket` column
+    * Readers: `spark.read.parquet(path)` — the `_bucket` column
     * materializes from partition discovery; drop it (or feed it back
     * as a co-location hint for key-equi-joins against the snapshot).
     */
-  def upsertParquetBucketed(changes: DataFrame, keyCols: Seq[String],
-      statePath: String, checkpoint: String, numBuckets: Int = 64,
-      queryName: Option[String] = None): StreamingQuery =
-    named(changes.writeStream, queryName)
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        import org.apache.hadoop.fs.Path
-        import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-        val spark = batch0.sparkSession
-        // Non-CDC update-mode streams (stateful operators emitting
-        // refreshed per-key images, e.g. the funnel/histogram twins)
-        // carry no _op/_seq: treat each row as an upsert image with the
-        // batch id as its sequence, so later batches override earlier
-        // snapshots — exactly update-output semantics. CDC-shaped input
-        // (both columns present) keeps its own ordering.
-        val hasOp = batch0.columns.contains(graft.cdc.ChangeModel.OpCol)
-        val hasSeq = batch0.columns.contains(graft.cdc.ChangeModel.SeqCol)
-        require(hasOp == hasSeq,
-          s"sink input has ${if (hasOp) "_op" else "_seq"} without its " +
-            "partner column; provide both (CDC shape) or neither " +
-            "(plain upsert images)")
-        val batch =
-          if (hasOp) batch0
-          else batch0
-            .withColumn(graft.cdc.ChangeModel.OpCol,
-              lit(graft.cdc.ChangeModel.Insert))
-            .withColumn(graft.cdc.ChangeModel.SeqCol, lit(batchId))
-        val bucketOf = pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets))
-          .cast("int")
-        // persist: the batch feeds two actions (touched-bucket probe +
-        // merge write); without it the source side is recomputed twice
-        val withB = batch.withColumn("_bucket", bucketOf)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-        val touched = withB.select("_bucket").distinct()
-          .collect().map(_.getInt(0)).sorted // ≤ numBuckets values
-        if (touched.nonEmpty) {
-          // resolve the filesystem FROM the state path (s3a://, hdfs://,
-          // file:// all differ from fs.defaultFS in general)
-          val fs = new Path(statePath).getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          // Guard against a pre-bucketed (flat) snapshot at this path:
-          // the bucket merge only reads `_bucket=<i>/` dirs, so flat
-          // parquet here would be silently IGNORED and the keyset
-          // rebuilt from one microbatch — fail loudly instead (migrate
-          // by rewriting the old snapshot through a one-off batch
-          // upsert into a fresh path).
-          if (fs.exists(new Path(statePath))) {
-            val flat = fs.listStatus(new Path(statePath)).filter { st =>
-              val n = st.getPath.getName
-              !n.startsWith("_bucket=") && !n.startsWith("_") &&
-                !n.startsWith(".")
-            }
-            require(flat.isEmpty,
-              s"unbucketed snapshot content at $statePath " +
-                s"(e.g. ${flat.head.getPath.getName}); bucketed upsert " +
-                "would ignore it — migrate the snapshot first")
-          }
-          val bakRoot = new Path(statePath + "_bak")
-          def liveDir(b: Int) = new Path(statePath, s"_bucket=$b")
-          def bakDir(b: Int) = new Path(bakRoot, s"_bucket=$b")
-          // last committed copy per touched bucket (live wins; backup
-          // covers the demote..promote crash window)
-          val existingDirs = touched.flatMap { b =>
-            if (fs.exists(liveDir(b))) Some(liveDir(b).toString)
-            else if (fs.exists(bakDir(b))) Some(bakDir(b).toString)
-            else None
-          }
-          val existing =
-            if (existingDirs.isEmpty) None
-            // leaf-dir read skips partition discovery; _bucket is
-            // recomputed from the keys (same hash), not the dir name
-            else Some(spark.read.parquet(existingDirs.toIndexedSeq: _*)
-              .withColumn("_bucket", bucketOf))
-          val merged = graft.cdc.ChangeModel.latestImages(
-            existing match {
-              case Some(e) => e.unionByName(withB, allowMissingColumns = true)
-              case None    => withB
-            }, keyCols)
-          val tmp = statePath + "_tmp"
-          merged
-            // co-locate each bucket into one task → one file per bucket
-            .repartition(math.max(touched.length, 1), col("_bucket"))
-            .write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-          fs.mkdirs(new Path(statePath))
-          def renameOrFail(from: Path, to: Path): Unit =
-            require(fs.rename(from, to), s"rename $from -> $to failed")
-          touched.foreach { b =>
-            val src = new Path(tmp, s"_bucket=$b")
-            val dst = liveDir(b); val bak = bakDir(b)
-            fs.mkdirs(bakRoot)
-            if (fs.exists(dst)) {
-              fs.delete(bak, true)
-              renameOrFail(dst, bak)
-            }
-            // src may not exist when every key in the bucket was
-            // deleted — the bucket's new state is empty
-            if (fs.exists(src)) renameOrFail(src, dst)
-            fs.delete(bak, true)
-          }
-          fs.delete(new Path(tmp), true)
+  final case class BucketedParquet(path: String, numBuckets: Int = 1)
+      extends Target {
+    def merge(spark: SparkSession, images: DataFrame, deleteKeys: DataFrame,
+        keyCols: Seq[String], txn: Option[(String, Long)]): Unit = {
+      import org.apache.hadoop.fs.Path
+      import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+      val bucketOf = pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets))
+        .cast("int")
+      val keys = images.select(keyCols.map(col): _*).unionByName(deleteKeys)
+      val touched = keys.select(bucketOf).distinct()
+        .collect().map(_.getInt(0)).sorted // ≤ numBuckets values
+      // resolve the filesystem FROM the state path (s3a://, hdfs://,
+      // file:// all differ from fs.defaultFS in general)
+      val fs = new Path(path).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      // Guard against a pre-bucketed (flat) snapshot at this path:
+      // the bucket merge only reads `_bucket=<i>/` dirs, so flat
+      // parquet here would be silently IGNORED and the keyset
+      // rebuilt from one microbatch — fail loudly instead (migrate
+      // by rewriting the old snapshot through a one-off batch
+      // upsert into a fresh path).
+      if (fs.exists(new Path(path))) {
+        val flat = fs.listStatus(new Path(path)).filter { st =>
+          val n = st.getPath.getName
+          !n.startsWith("_bucket=") && !n.startsWith("_") &&
+            !n.startsWith(".")
         }
-        } finally { withB.unpersist(); () }
-        ()
+        require(flat.isEmpty,
+          s"unbucketed snapshot content at $path " +
+            s"(e.g. ${flat.head.getPath.getName}); bucketed upsert " +
+            "would ignore it — migrate the snapshot first")
       }
-      .start()
+      val bakRoot = new Path(path + "_bak")
+      def liveDir(b: Int) = new Path(path, s"_bucket=$b")
+      def bakDir(b: Int) = new Path(bakRoot, s"_bucket=$b")
+      // last committed copy per touched bucket (live wins; backup
+      // covers the demote..promote crash window)
+      val existingDirs = touched.flatMap { b =>
+        if (fs.exists(liveDir(b))) Some(liveDir(b).toString)
+        else if (fs.exists(bakDir(b))) Some(bakDir(b).toString)
+        else None
+      }
+      val merged =
+        if (existingDirs.isEmpty) images
+        // leaf-dir read skips partition discovery; _bucket is
+        // recomputed from the keys (same hash), not the dir name.
+        // Older stream-written snapshots also hold `_op`/`_seq` image
+        // columns, which are not payload: drop them.
+        else spark.read.parquet(existingDirs.toIndexedSeq: _*)
+          .drop(ChangeModel.OpCol, ChangeModel.SeqCol)
+          .join(keys, keyCols, "left_anti")
+          .unionByName(images, allowMissingColumns = true)
+      val tmp = path + "_tmp"
+      merged.withColumn("_bucket", bucketOf)
+        // co-locate each bucket into one task → one file per bucket
+        .repartition(math.max(touched.length, 1), col("_bucket"))
+        .write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
+      fs.mkdirs(new Path(path))
+      def renameOrFail(from: Path, to: Path): Unit =
+        require(fs.rename(from, to), s"rename $from -> $to failed")
+      touched.foreach { b =>
+        val src = new Path(tmp, s"_bucket=$b")
+        val dst = liveDir(b); val bak = bakDir(b)
+        fs.mkdirs(bakRoot)
+        if (fs.exists(dst)) {
+          fs.delete(bak, true)
+          renameOrFail(dst, bak)
+        }
+        // src may not exist when every key in the bucket was
+        // deleted — the bucket's new state is empty
+        if (fs.exists(src)) renameOrFail(src, dst)
+        fs.delete(bak, true)
+      }
+      fs.delete(new Path(tmp), true)
+    }
+  }
 
-  /** Keyed JDBC upsert sink — the portable equivalent of the
-    * reference's ClickHouse sink (dozer-sink-clickhouse/src/sink.rs:
-    * 262-288 batches rows per epoch and flushes them keyed on the PK;
-    * ddl.rs:44 creates the target). Per microbatch:
+  /** Keyed JDBC table — the portable equivalent of the reference's
+    * ClickHouse sink (dozer-sink-clickhouse/src/sink.rs:262-288 batches
+    * rows per epoch and flushes them keyed on the PK; ddl.rs:44 creates
+    * the target). Per merge:
     *
-    *   1. reduce the batch to its latest image per key (keeping
-    *      deletes),
-    *   2. bulk-load it into `<table>_staging` through Spark's JDBC
-    *      writer (parallel, one transaction per partition),
-    *   3. one driver-side transaction merges staging into the target:
+    *   1. bulk-load images and delete keys (tagged by `_op`) into
+    *      `<table>_staging` through Spark's JDBC writer (parallel, one
+    *      transaction per partition — no row moves through the driver),
+    *   2. one driver-side transaction merges staging into the target:
     *      `DELETE ... WHERE EXISTS (staging match)` then
-    *      `INSERT ... SELECT surviving images` — ANSI-portable
+    *      `INSERT ... SELECT` the staged images — ANSI-portable
     *      (Postgres/MySQL/Derby; swap for MERGE on engines where it's
     *      cheaper), exactly the delete+reinsert a ReplacingMergeTree
     *      collapse performs.
     *
-    * Exactly-once: the merge transaction is idempotent (re-applying
-    * the same staging content reproduces the same target rows), so a
-    * foreachBatch retry after a crash converges; the checkpoint is the
-    * resume token (OpIdentifier analogue).
-    *
-    * The target table is created on first use from the staging
-    * table's layout. Column names must be JDBC-identifier-safe.
+    * The target table is created on first use from the images' layout.
+    * Column names must be JDBC-identifier-safe.
     */
-  def upsertJdbc(changes: DataFrame, keyCols: Seq[String], url: String,
-      table: String, checkpoint: String,
-      connectionProperties: java.util.Properties = new java.util.Properties)
-      : StreamingQuery =
-    changes.writeStream
+  final case class Jdbc(url: String, table: String,
+      props: java.util.Properties = new java.util.Properties) extends Target {
+    def merge(spark: SparkSession, images: DataFrame, deleteKeys: DataFrame,
+        keyCols: Seq[String], txn: Option[(String, Long)]): Unit = {
+      import org.apache.spark.sql.functions.lit
+      val Op = ChangeModel.OpCol
+      val staging = table + "_staging"
+      val staged = images.withColumn(Op, lit(ChangeModel.Insert))
+        .unionByName(deleteKeys.withColumn(Op, lit(ChangeModel.Delete)),
+          allowMissingColumns = true)
+      // string KEY columns must be declared as a comparable SQL type —
+      // Spark's default string mapping is CLOB/TEXT on several dialects
+      // (Derby among them) and CLOBs can't sit in an equality predicate.
+      // Merge keys are short by contract; payload strings keep the default.
+      val keyTypes = images.schema.fields
+        .filter(f => keyCols.contains(f.name) &&
+          f.dataType == org.apache.spark.sql.types.StringType)
+        .map(f => s"${f.name} VARCHAR(512)")
+      def writer(df: DataFrame) = {
+        val w = df.write
+        if (keyTypes.nonEmpty)
+          w.option("createTableColumnTypes", keyTypes.mkString(", ")) else w
+      }
+      writer(staged).mode("overwrite").jdbc(url, staging, props)
+      // create the target on first use through Spark's own JDBC writer
+      // (SaveMode.Ignore: create-if-missing, no-op otherwise) — the
+      // dialect supplies portable DDL, where a hand-written
+      // CREATE TABLE ... AS would not survive MySQL
+      writer(images.limit(0)).mode("ignore").jdbc(url, table, props)
+      // Spark's JDBC writer creates columns dialect-quoted
+      // (case-preserved); the merge SQL must quote identically or
+      // case-normalizing engines (Derby, Postgres) won't resolve them
+      val dialect = org.apache.spark.sql.jdbc.JdbcDialects.get(url)
+      def q(id: String) = dialect.quoteIdentifier(id)
+      val colList = images.columns.map(q).mkString(", ")
+      val keyMatch = keyCols
+        .map(k => s"$table.${q(k)} = s.${q(k)}").mkString(" AND ")
+      val conn = java.sql.DriverManager.getConnection(url, props)
+      try {
+        conn.setAutoCommit(false)
+        val st = conn.createStatement()
+        try {
+          st.executeUpdate(
+            s"DELETE FROM $table WHERE EXISTS " +
+              s"(SELECT 1 FROM $staging s WHERE $keyMatch)")
+          // CAST: dialects that map StringType to CLOB (Derby) don't
+          // support <> directly on the column
+          st.executeUpdate(
+            s"INSERT INTO $table ($colList) SELECT $colList " +
+              s"FROM $staging WHERE CAST(${q(Op)} AS VARCHAR(32)) <> " +
+              s"'${ChangeModel.Delete}'")
+          conn.commit()
+        } catch {
+          case e: Throwable => conn.rollback(); throw e
+        } finally st.close()
+      } finally conn.close()
+    }
+  }
+
+  /** The keyed-sink body: collapse `batch` to one final row per key and
+    * hand the images and delete keys to `target`. Input is either CDC
+    * shaped (both `_op` and `_seq`) or plain rows (neither), which become
+    * inserts ordered by arrival. Runs once per micro-batch under
+    * [[upsert]] and once per run for a batch pipeline's keyed sinks.
+    */
+  def upsertBatch(batch: DataFrame, keyCols: Seq[String], target: Target,
+      txn: Option[(String, Long)] = None): Unit = {
+    import org.apache.spark.sql.functions.{col, lit,
+      monotonically_increasing_id}
+    import ChangeModel.{OpCol, SeqCol}
+    require(keyCols.nonEmpty, "a keyed sink needs key columns")
+    val hasOp = batch.columns.contains(OpCol)
+    val hasSeq = batch.columns.contains(SeqCol)
+    require(hasOp == hasSeq,
+      s"sink input has ${if (hasOp) OpCol else SeqCol} without its " +
+        "partner column; provide both (CDC shape) or neither " +
+        "(plain upsert images)")
+    val changes =
+      if (hasOp) batch
+      else batch
+        .withColumn(OpCol, lit(ChangeModel.Insert))
+        .withColumn(SeqCol, monotonically_increasing_id())
+    val latest = ChangeModel.latestRows(changes, keyCols)
+      .localCheckpoint() // one row per key, reused for both splits
+    try {
+      if (!latest.isEmpty)
+        target.merge(batch.sparkSession,
+          latest.filter(col(OpCol) === ChangeModel.Insert).drop(OpCol, SeqCol),
+          latest.filter(col(OpCol) === ChangeModel.Delete)
+            .select(keyCols.map(col): _*),
+          keyCols, txn)
+    } finally {
+      // the checkpoint's blocks ARE its data and otherwise stay in the
+      // block manager until a GC happens to reclaim the RDD: drop them
+      // once the merge has committed (no Spark job)
+      latest.queryExecution.logical.foreach {
+        case r: org.apache.spark.sql.execution.LogicalRDD =>
+          r.rdd.unpersist(blocking = false); ()
+        case _ => ()
+      }
+    }
+  }
+
+  /** Streaming keyed sink: [[upsertBatch]] per checkpointed micro-batch,
+    * with `txn = (appId, batchId)`. `appId` must stay stable for the
+    * sink across restarts; it defaults to the checkpoint location, the
+    * scope the batch ids are numbered in.
+    */
+  def upsert(changes: DataFrame, keyCols: Seq[String], target: Target,
+      checkpoint: String, appId: Option[String] = None,
+      queryName: Option[String] = None): StreamingQuery = {
+    val app = appId.getOrElse(checkpoint)
+    named(changes.writeStream, queryName)
       .outputMode(OutputMode.Update)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions.{col, row_number}
-        import org.apache.spark.sql.expressions.Window
-        val Op = graft.cdc.ChangeModel.OpCol
-        val Seqc = graft.cdc.ChangeModel.SeqCol
-        val staging = table + "_staging"
-        // latest change per key, deletes preserved (unlike
-        // latestImages, which drops them — the sink must act on them)
-        val w = Window.partitionBy(keyCols.map(col): _*)
-          .orderBy(col(Seqc).desc,
-            org.apache.spark.sql.functions.when(
-              col(Op) === graft.cdc.ChangeModel.UpdatePre, 1).otherwise(2).desc)
-        val latest = batch
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-        latest.write.mode("overwrite")
-          .jdbc(url, staging, connectionProperties)
-        // create the target on first use through Spark's own JDBC
-        // writer (SaveMode.Ignore: create-if-missing, no-op otherwise)
-        // — the dialect supplies portable DDL, where a hand-written
-        // CREATE TABLE ... AS would not survive MySQL
-        latest.drop(graft.cdc.ChangeModel.OpCol,
-            graft.cdc.ChangeModel.SeqCol)
-          .limit(0).write.mode("ignore")
-          .jdbc(url, table, connectionProperties)
-        // Spark's JDBC writer creates columns dialect-quoted
-        // (case-preserved); the merge SQL must quote identically or
-        // case-normalizing engines (Derby, Postgres) won't resolve them
-        val dialect = org.apache.spark.sql.jdbc.JdbcDialects.get(url)
-        def q(id: String) = dialect.quoteIdentifier(id)
-        val payloadCols = latest.columns.filterNot(c => c == Op || c == Seqc)
-        val colList = payloadCols.map(q).mkString(", ")
-        val keyMatch = keyCols
-          .map(k => s"$table.${q(k)} = s.${q(k)}").mkString(" AND ")
-        val conn = java.sql.DriverManager.getConnection(url,
-          connectionProperties)
-        try {
-          conn.setAutoCommit(false)
-          val st = conn.createStatement()
-          try {
-            st.executeUpdate(
-              s"DELETE FROM $table WHERE EXISTS " +
-                s"(SELECT 1 FROM $staging s WHERE $keyMatch)")
-            // CAST: dialects that map StringType to CLOB (Derby) don't
-            // support <> directly on the column
-            st.executeUpdate(
-              s"INSERT INTO $table ($colList) SELECT $colList " +
-                s"FROM $staging WHERE CAST(${q(Op)} AS VARCHAR(32)) <> " +
-                s"'${graft.cdc.ChangeModel.Delete}'")
-            conn.commit()
-          } catch {
-            case e: Throwable => conn.rollback(); throw e
-          } finally st.close()
-        } finally conn.close()
-        ()
+        upsertBatch(batch, keyCols, target, Some((app, batchId)))
       }
       .start()
-
-  /** Config-level JDBC upsert for PLAIN rows (no CDC metadata): stage
-    * the batch, then transactionally delete target rows whose key
-    * appears in the stage and insert the stage. This is the merge
-    * contract `dozer run` configs surface for the ClickHouse/Oracle
-    * sinks (reference dozer-sink-clickhouse/src/sink.rs:262-288 maps
-    * deltas onto versioned inserts; with plain INTO output rows the
-    * merge IS delete+insert). Same staging/quoting machinery as
-    * [[upsertJdbc]], minus the delta classification.
-    *
-    * Scale note: the stage write is distributed (Spark JDBC writer);
-    * only the two merge statements run on the target engine, which is
-    * where a warehouse wants them — no row ever moves through the
-    * driver.
-    */
-  def upsertJdbcRowsBatch(rows: DataFrame, keyCols: Seq[String], url: String,
-      table: String,
-      connectionProperties: java.util.Properties = new java.util.Properties)
-      : Unit = {
-    require(keyCols.nonEmpty, "upsertJdbcRowsBatch needs key columns")
-    val staging = table + "_staging"
-    // string KEY columns must be declared as a comparable SQL type —
-    // Spark's default string mapping is CLOB/TEXT on several dialects
-    // (Derby among them) and CLOBs can't sit in an equality predicate.
-    // Merge keys are short by contract; payload strings keep the default.
-    val keyTypes = rows.schema.fields
-      .filter(f => keyCols.contains(f.name) &&
-        f.dataType == org.apache.spark.sql.types.StringType)
-      .map(f => s"${f.name} VARCHAR(512)")
-    def writer(df: DataFrame) = {
-      val w = df.write
-      if (keyTypes.nonEmpty)
-        w.option("createTableColumnTypes", keyTypes.mkString(", ")) else w
-    }
-    writer(rows).mode("overwrite").jdbc(url, staging, connectionProperties)
-    writer(rows.limit(0)).mode("ignore").jdbc(url, table, connectionProperties)
-    val dialect = org.apache.spark.sql.jdbc.JdbcDialects.get(url)
-    def q(id: String) = dialect.quoteIdentifier(id)
-    val colList = rows.columns.map(q).mkString(", ")
-    val keyMatch = keyCols
-      .map(k => s"$table.${q(k)} = s.${q(k)}").mkString(" AND ")
-    val conn = java.sql.DriverManager.getConnection(url, connectionProperties)
-    try {
-      conn.setAutoCommit(false)
-      val st = conn.createStatement()
-      try {
-        st.executeUpdate(
-          s"DELETE FROM $table WHERE EXISTS " +
-            s"(SELECT 1 FROM $staging s WHERE $keyMatch)")
-        st.executeUpdate(
-          s"INSERT INTO $table ($colList) SELECT $colList FROM $staging")
-        conn.commit()
-      } catch {
-        case e: Throwable => conn.rollback(); throw e
-      } finally st.close()
-    } finally conn.close()
   }
-
-  /** Streaming wrapper over [[upsertJdbcRowsBatch]] — checkpointed
-    * foreachBatch, exactly-once via the idempotent key merge.
-    */
-  def upsertJdbcRows(rows: DataFrame, keyCols: Seq[String], url: String,
-      table: String, checkpoint: String,
-      connectionProperties: java.util.Properties = new java.util.Properties,
-      queryName: Option[String] = None)
-      : StreamingQuery =
-    named(rows.writeStream, queryName)
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertJdbcRowsBatch(batch, keyCols, url, table, connectionProperties)
-      }
-      .start()
 }

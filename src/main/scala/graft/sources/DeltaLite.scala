@@ -4278,11 +4278,14 @@ object DeltaLite {
     * delete key absent from the table is a no-op, one present in
     * `batch` too is a contract error (the collapse step upstream must
     * decide). Empty batch + empty deletes is a no-op (no commit).
-    * Returns the table version.
+    * A missing table is created by the first non-empty upsert, with
+    * `configuration` stamped as its table properties (as [[write]]
+    * does). Returns the table version.
     */
   def upsert(spark: SparkSession, batch: DataFrame, tablePath: String,
       keyCols: Seq[String], txn: Option[(String, Long)] = None,
-      deleteKeys: Option[DataFrame] = None): Long = {
+      deleteKeys: Option[DataFrame] = None,
+      configuration: Map[String, String] = Map.empty): Long = {
     import org.apache.spark.sql.functions.{col, count, countDistinct, lit,
       max, min, struct, sum}
     require(keyCols.nonEmpty, "upsert needs at least one key column")
@@ -4339,7 +4342,8 @@ object DeltaLite {
 
     if (!fs.exists(logDir)) {
       allKeysDf.unpersist()
-      return write(spark, batch, tablePath, "append", txn)
+      return write(spark, batch, tablePath, "append", txn,
+        configuration = configuration)
     }
     val snap = snapshot(spark, tablePath)
     checkWriterProtocol(snap, dataChangeMutation = true, "MERGE")

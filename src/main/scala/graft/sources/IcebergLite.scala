@@ -3073,7 +3073,8 @@ object IcebergLite {
     * merge-on-read counterpart of [[DeltaLite.upsert]]'s copy-on-write:
     * NO data file is rewritten, new bytes are O(batch + matched
     * positions), and the scan-side cost is the anti join [[read]]
-    * already pays. Keys must be non-null on both sides.
+    * already pays. Keys must be non-null on both sides. A missing
+    * table is created by the upsert, as [[DeltaLite.upsert]] does.
     */
   def upsert(spark: SparkSession, batch: DataFrame, tablePath: String,
       keyCols: Seq[String], deleteKeys: Option[DataFrame] = None,
@@ -3081,6 +3082,10 @@ object IcebergLite {
     import org.apache.spark.sql.functions.broadcast
     import spark.implicits._
     require(keyCols.nonEmpty, "upsert needs at least one key column")
+    val root = new Path(tablePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(new Path(root, "metadata")))
+      return write(spark, batch, tablePath, txn = txn)
     val prior = snapshotState(spark, tablePath)
     require(keyCols.forall(prior.meta.schema.fieldNames.contains),
       s"key columns ${keyCols.mkString(",")} must exist in the table schema")
@@ -3100,8 +3105,6 @@ object IcebergLite {
       return write(spark,
         batch.select(prior.meta.schema.fieldNames.map(col).toIndexedSeq: _*),
         tablePath, txn = txn)
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // positions of currently-visible rows holding a touched key —
     // scanned only over the files whose MANIFEST BOUNDS may hold one
     // (the spec's per-file column stats; files without bounds never

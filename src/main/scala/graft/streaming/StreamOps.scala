@@ -84,7 +84,7 @@ object StreamOps {
     * the emitted snapshot each microbatch. Batch path delegates to
     * [[graft.cdc.ChangeModel.applyChanges]]; streaming path is
     * dropDuplicates-within-watermark + per-batch reduction via
-    * foreachBatch in [[graft.sinks.Sinks.upsertParquet]].
+    * foreachBatch in [[graft.sinks.Sinks.upsert]].
     */
   def latestByKey(changes: DataFrame, keyCols: Seq[String]): DataFrame =
     graft.cdc.ChangeModel.applyChanges(changes, keyCols)

@@ -481,8 +481,8 @@ class DeltaLiteSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(src)
     def run(): Unit = {
       val stream = spark.readStream.schema(schema).parquet(src)
-      val q = graft.sinks.Sinks.upsertDelta(stream, Seq("k"), tbl, ckpt,
-        "uapp1")
+      val q = graft.sinks.Sinks.upsert(stream, Seq("k"),
+        graft.sinks.Sinks.Delta(tbl), ckpt, appId = Some("uapp1"))
       assert(q.awaitTermination(120000), "stream timed out")
     }
     run()

@@ -2514,4 +2514,178 @@ class GraftAppSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSet == Set((1L, "a")))
   }
 
+
+  // ------------------------------------------------ keyed sinks (one path)
+
+  private def runToEnd(config: GraftConfig): Unit = {
+    val qs = runStreaming(spark, config)
+    try qs.foreach(_.awaitTermination()) finally qs.foreach(_.stop())
+  }
+
+  /** A parquet directory of CDC change rows `(k, v, _op, _seq)`. */
+  private def writeChanges(path: String,
+      rows: Seq[(Long, String, String, Long)]): Unit = {
+    import spark.implicits._
+    rows.toDF("k", "v", "_op", "_seq").write.mode("append").parquet(path)
+  }
+
+  test("streaming jdbc sink collapses webhook changes: one row per key, " +
+      "deletes applied, no _op/_seq columns in the target") {
+    import graft.sources.PushBuffer
+    val chan = "jdbc_keyed_stream"
+    PushBuffer.clear(chan)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_jdbc_stream").toString
+    val url = "jdbc:derby:memory:graftjdbcstream;create=true"
+    val config = GraftConfigLoader.fromYaml(
+      s"""sources:
+         |  - name: changes
+         |    path: ""
+         |    decode: webhook
+         |    schema: "id BIGINT, v BIGINT"
+         |    options:
+         |      channel: $chan
+         |sql: |
+         |  SELECT id, v, _op, _seq INTO accts FROM changes;
+         |sinks:
+         |  - table: accts
+         |    mode: jdbc
+         |    keys: [id]
+         |    checkpoint: $tmp/ckpt
+         |    options: {url: "$url", dbtable: accts}
+         |streaming: true
+         |""".stripMargin)
+    def env(verb: String, data: String) = s"""{"verb":"$verb","data":$data}"""
+    PushBuffer.pushAll(chan, Seq(
+      env("POST", """{"id":1,"v":10}"""), env("PUT", """{"id":1,"v":11}"""),
+      env("POST", """{"id":2,"v":20}"""), env("DELETE", """{"id":2}"""),
+      env("POST", """{"id":3,"v":30}""")), waitMs = 0L)
+    try {
+      runToEnd(config)
+      val out = spark.read.jdbc(url, "accts", new java.util.Properties)
+      assert(out.columns.map(_.toLowerCase).toSet == Set("id", "v"),
+        out.columns.mkString(", "))
+      assert(out.select("id", "v").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted ==
+        Seq(1L -> 11L, 3L -> 30L))
+    } finally PushBuffer.clear(chan)
+  }
+
+  test("batch parquet upsert merges by key into the existing snapshot") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_pq_up").toString
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
+      .write.parquet(s"$tmp/src")
+    def upCfg(sql: String) = GraftConfigLoader.fromYaml(
+      s"""sources:
+         |  - name: pt
+         |    path: $tmp/src
+         |sql: $sql;
+         |sinks:
+         |  - table: o
+         |    path: $tmp/up
+         |    mode: upsert
+         |    keys: [k]
+         |""".stripMargin)
+    runBatch(spark, upCfg("SELECT k, v INTO o FROM pt"))
+    runBatch(spark,
+      upCfg("SELECT k, upper(v) AS v INTO o FROM pt WHERE k >= 2"))
+    assert(spark.read.parquet(s"$tmp/up").select("k", "v")
+      .as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "B"), (3L, "C")))
+  }
+
+  test("a stream takes over a batch-written parquet snapshot and keeps " +
+      "the keys it does not touch") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_takeover").toString
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$tmp/seed")
+    runBatch(spark, GraftConfigLoader.fromYaml(
+      s"""sources:
+         |  - name: seed
+         |    path: $tmp/seed
+         |sql: SELECT k, v INTO o FROM seed;
+         |sinks:
+         |  - table: o
+         |    path: $tmp/state
+         |    mode: upsert
+         |    keys: [k]
+         |""".stripMargin))
+    writeChanges(s"$tmp/changes",
+      Seq((1L, "a", "delete", 1L), (3L, "c", "insert", 2L)))
+    runToEnd(GraftConfigLoader.fromYaml(
+      s"""sources:
+         |  - name: ch
+         |    path: $tmp/changes
+         |sql: SELECT k, v, _op, _seq INTO o FROM ch;
+         |sinks:
+         |  - table: o
+         |    path: $tmp/state
+         |    checkpoint: $tmp/ckpt
+         |    mode: upsert
+         |    keys: [k]
+         |streaming: true
+         |""".stripMargin))
+    assert(spark.read.parquet(s"$tmp/state").select("k", "v")
+      .as[(Long, String)].collect().toSet == Set((2L, "b"), (3L, "c")))
+  }
+
+  test("streaming iceberg append and upsert sinks commit natively from " +
+      "config alone") {
+    import graft.sources.IcebergLite
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ice_stream").toString
+    writeChanges(s"$tmp/changes", Seq((1L, "a", "insert", 1L),
+      (2L, "b", "insert", 2L), (1L, "A", "update_postimage", 3L),
+      (2L, "b", "delete", 4L), (3L, "c", "insert", 5L)))
+    runToEnd(GraftConfigLoader.fromYaml(
+      s"""sources:
+         |  - name: ch
+         |    path: $tmp/changes
+         |sql: |
+         |  SELECT k, v, _op, _seq INTO latest FROM ch;
+         |  SELECT k, v, _op INTO log FROM ch;
+         |sinks:
+         |  - table: latest
+         |    path: $tmp/latest
+         |    format: iceberg
+         |    mode: upsert
+         |    keys: [k]
+         |  - table: log
+         |    path: $tmp/log
+         |    format: iceberg
+         |    mode: append
+         |streaming: true
+         |""".stripMargin))
+    assert(IcebergLite.read(spark, s"$tmp/latest").select("k", "v")
+      .as[(Long, String)].collect().toSet == Set((1L, "A"), (3L, "c")))
+    assert(IcebergLite.read(spark, s"$tmp/log").count() == 5)
+  }
+
+  test("streaming delta upsert stamps sink table properties when its " +
+      "first batch creates the table") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_delta_props").toString
+    writeChanges(s"$tmp/changes",
+      Seq((1L, "a", "insert", 1L), (2L, "b", "insert", 2L)))
+    runToEnd(GraftConfigLoader.fromYaml(
+      s"""sources:
+         |  - name: ch
+         |    path: $tmp/changes
+         |sql: SELECT k, v, _op, _seq INTO o FROM ch;
+         |sinks:
+         |  - table: o
+         |    path: $tmp/tbl
+         |    format: delta
+         |    mode: upsert
+         |    keys: [k]
+         |    options:
+         |      enable_change_data_feed: true
+         |      property.delta.constraints.kpos: "k > 0"
+         |streaming: true
+         |""".stripMargin))
+    val conf = graft.sources.DeltaLite.snapshot(spark, s"$tmp/tbl").configuration
+    assert(conf.get("delta.enableChangeDataFeed").contains("true"), conf)
+    assert(conf.get("delta.constraints.kpos").contains("k > 0"), conf)
+    assert(graft.sources.DeltaLite.read(spark, s"$tmp/tbl").count() == 2)
+  }
+
 }

@@ -792,8 +792,8 @@ class IcebergLiteSpec extends AnyFunSuite {
         Seq((1L, "a", "insert", 1L))
           .toDF("k", "v", ChangeModel.OpCol, ChangeModel.SeqCol).schema)
         .parquet(src)
-      val q = graft.sinks.Sinks.upsertIceberg(stream, Seq("k"), tbl,
-        s"$base/$ck", "up1")
+      val q = graft.sinks.Sinks.upsert(stream, Seq("k"),
+        graft.sinks.Sinks.Iceberg(tbl), s"$base/$ck", appId = Some("up1"))
       assert(q.awaitTermination(120000), "stream timed out")
     }
     run("ck1")

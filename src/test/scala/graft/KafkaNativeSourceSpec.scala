@@ -387,8 +387,9 @@ class KafkaNativeSourceSpec extends AnyFunSuite {
         .option("broker", broker.broker).option("topic", "tcjs").load()
       val ch = graft.cdc.ConnectJson.decodeWith(
         derived, stream, "value", seq = Some(col("offset")))
-      graft.sinks.Sinks.upsertParquetBucketed(ch, derived.primaryKey,
-        s"$tmp/state", s"$tmp/ckpt", numBuckets = 4).awaitTermination()
+      graft.sinks.Sinks.upsert(ch, derived.primaryKey,
+        graft.sinks.Sinks.BucketedParquet(s"$tmp/state", numBuckets = 4),
+        s"$tmp/ckpt").awaitTermination()
     }
     try {
       run()
@@ -435,9 +436,10 @@ class KafkaNativeSourceSpec extends AnyFunSuite {
         .option("valueFormat", "binary").load()
       val ch = AvroConfluent.changes(
         stream.withColumnRenamed("offset", "seq"), "value", envSchema)
-      graft.sinks.Sinks.upsertParquetBucketed(
+      graft.sinks.Sinks.upsert(
         ch.withColumnRenamed("seq", graft.cdc.ChangeModel.SeqCol),
-        Seq("id"), s"$tmp/state", s"$tmp/ckpt", numBuckets = 2)
+        Seq("id"), graft.sinks.Sinks.BucketedParquet(s"$tmp/state",
+          numBuckets = 2), s"$tmp/ckpt")
         .awaitTermination()
     }
     try {

@@ -133,14 +133,16 @@ class StreamingSpec extends AnyFunSuite {
     mem.addData(
       Change(1L, 10.0, ChangeModel.Insert, 1L),
       Change(2L, 20.0, ChangeModel.Insert, 2L))
-    val q1 = graft.sinks.Sinks.upsertParquet(mem.toDF(), Seq("k"), state, ckpt)
+    val q1 = graft.sinks.Sinks.upsert(mem.toDF(), Seq("k"),
+      graft.sinks.Sinks.BucketedParquet(state), ckpt)
     q1.awaitTermination()
     // batch 2: k1 updated to 11, k2 deleted, k3 inserted
     mem.addData(
       Change(1L, 11.0, ChangeModel.UpdatePost, 3L),
       Change(2L, 20.0, ChangeModel.Delete, 4L),
       Change(3L, 30.0, ChangeModel.Insert, 5L))
-    val q2 = graft.sinks.Sinks.upsertParquet(mem.toDF(), Seq("k"), state, ckpt)
+    val q2 = graft.sinks.Sinks.upsert(mem.toDF(), Seq("k"),
+      graft.sinks.Sinks.BucketedParquet(state), ckpt)
     q2.awaitTermination()
     val finalState = spark.read.parquet(state)
       .select("k", "v").collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
@@ -539,19 +541,21 @@ class StreamingSpec extends AnyFunSuite {
     mem.addData(
       Change(1L, 10.0, ChangeModel.Insert, 1L),
       Change(2L, 20.0, ChangeModel.Insert, 2L))
-    graft.sinks.Sinks.upsertParquet(mem.toDF(), Seq("k"), state, ckpt)
+    graft.sinks.Sinks.upsert(mem.toDF(), Seq("k"),
+      graft.sinks.Sinks.BucketedParquet(state), ckpt)
       .awaitTermination()
     // Simulate a crash between demoting the live bucket and promoting
     // the new one: only the backup exists when the retry starts.
-    // (upsertParquet IS the bucketed path at numBuckets=1, so the
-    // demote target is `<state>_bak/_bucket=0`.)
+    // (the default parquet target is one bucket, so the demote target
+    // is `<state>_bak/_bucket=0`.)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     assert(fs.mkdirs(new org.apache.hadoop.fs.Path(state + "_bak")))
     assert(fs.rename(new org.apache.hadoop.fs.Path(state + "/_bucket=0"),
       new org.apache.hadoop.fs.Path(state + "_bak/_bucket=0")))
     mem.addData(Change(3L, 30.0, ChangeModel.Insert, 3L))
-    graft.sinks.Sinks.upsertParquet(mem.toDF(), Seq("k"), state, ckpt)
+    graft.sinks.Sinks.upsert(mem.toDF(), Seq("k"),
+      graft.sinks.Sinks.BucketedParquet(state), ckpt)
       .awaitTermination()
     // Keys committed before the crash survive; the snapshot was not
     // rebuilt from the retry microbatch alone.
@@ -560,6 +564,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(finalState == Set((1L, 10.0), (2L, 20.0), (3L, 30.0)))
     // the successful swap cleared the backup bucket
     assert(!fs.exists(new org.apache.hadoop.fs.Path(state + "_bak/_bucket=0")))
+  }
+
+  test("parquet upsert over a snapshot holding _op/_seq image columns " +
+      "keeps its rows and writes payload columns only") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft_old_snap").toString
+    val state = s"$tmp/state"
+    Seq(Change(1L, 10.0, ChangeModel.Insert, 1L),
+      Change(2L, 20.0, ChangeModel.Insert, 2L)).toDF()
+      .write.parquet(s"$state/_bucket=0")
+    val mem = MemoryStream[Change]
+    mem.addData(Change(2L, 21.0, ChangeModel.UpdatePost, 3L))
+    graft.sinks.Sinks.upsert(mem.toDF(), Seq("k"),
+      graft.sinks.Sinks.BucketedParquet(state), s"$tmp/ckpt")
+      .awaitTermination()
+    val out = spark.read.parquet(state)
+    assert(out.columns.toSet == Set("k", "v", "_bucket"), out.columns.toSeq)
+    assert(out.select("k", "v").as[(Long, Double)].collect().toSet ==
+      Set((1L, 10.0), (2L, 21.0)))
   }
 
   test("bucketed upsert rewrites only touched buckets, leaves others untouched") {
@@ -571,8 +595,8 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[Change]
     mem.addData((1L to 40L).map(k =>
       Change(k, k * 10.0, ChangeModel.Insert, k)): _*)
-    graft.sinks.Sinks.upsertParquetBucketed(
-      mem.toDF(), Seq("k"), state, ckpt, numBuckets = nb)
+    graft.sinks.Sinks.upsert(mem.toDF(), Seq("k"),
+      graft.sinks.Sinks.BucketedParquet(state, numBuckets = nb), ckpt)
       .awaitTermination()
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
@@ -588,8 +612,8 @@ class StreamingSpec extends AnyFunSuite {
       .select(pmod(xxhash64(col("k")), lit(nb)).cast("int")).collect()(0).getInt(0)
     // batch 2 touches ONLY key 1
     mem.addData(Change(1L, 99.0, ChangeModel.UpdatePost, 100L))
-    graft.sinks.Sinks.upsertParquetBucketed(
-      mem.toDF(), Seq("k"), state, ckpt, numBuckets = nb)
+    graft.sinks.Sinks.upsert(mem.toDF(), Seq("k"),
+      graft.sinks.Sinks.BucketedParquet(state, numBuckets = nb), ckpt)
       .awaitTermination()
     // state is correct
     val finalState = spark.read.parquet(state)
@@ -615,8 +639,8 @@ class StreamingSpec extends AnyFunSuite {
       Change(1L, 10.0, ChangeModel.Insert, 1L),
       Change(2L, 20.0, ChangeModel.Insert, 2L),
       Change(3L, 30.0, ChangeModel.Insert, 3L))
-    graft.sinks.Sinks.upsertParquetBucketed(
-      mem.toDF(), Seq("k"), state, ckpt, numBuckets = nb)
+    graft.sinks.Sinks.upsert(mem.toDF(), Seq("k"),
+      graft.sinks.Sinks.BucketedParquet(state, numBuckets = nb), ckpt)
       .awaitTermination()
     // crash simulation: demote key-2's bucket to the backup root (the
     // window between demote and promote)
@@ -632,8 +656,8 @@ class StreamingSpec extends AnyFunSuite {
     mem.addData(
       Change(1L, 10.0, ChangeModel.Delete, 4L),
       Change(2L, 21.0, ChangeModel.UpdatePost, 5L))
-    graft.sinks.Sinks.upsertParquetBucketed(
-      mem.toDF(), Seq("k"), state, ckpt, numBuckets = nb)
+    graft.sinks.Sinks.upsert(mem.toDF(), Seq("k"),
+      graft.sinks.Sinks.BucketedParquet(state, numBuckets = nb), ckpt)
       .awaitTermination()
     val finalState = spark.read.parquet(state)
       .select("k", "v").collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
@@ -712,9 +736,9 @@ class StreamingSpec extends AnyFunSuite {
     val changes = graft.sources.Sources.debeziumFileStream(
       spark, feedDir.getAbsolutePath, rowSchema)
     val state = new java.io.File(dir, "state").getAbsolutePath
-    graft.sinks.Sinks.upsertParquetBucketed(
-      changes, Seq("id"), state,
-      new java.io.File(dir, "ckpt").getAbsolutePath, numBuckets = 4)
+    graft.sinks.Sinks.upsert(changes, Seq("id"),
+      graft.sinks.Sinks.BucketedParquet(state, numBuckets = 4),
+      new java.io.File(dir, "ckpt").getAbsolutePath)
       .awaitTermination()
     val finalState = spark.read.parquet(state)
       .select("id", "name").collect()
@@ -731,8 +755,8 @@ class StreamingSpec extends AnyFunSuite {
     mem.addData(
       Change(1L, 10.0, ChangeModel.Insert, 1L),
       Change(2L, 20.0, ChangeModel.Insert, 2L))
-    graft.sinks.Sinks.upsertJdbc(
-      mem.toDF(), Seq("k"), url, "target_state", s"$tmp/ckpt")
+    graft.sinks.Sinks.upsert(mem.toDF(), Seq("k"),
+      graft.sinks.Sinks.Jdbc(url, "target_state"), s"$tmp/ckpt")
       .awaitTermination()
     // batch 2: update k1 (pre+post same seq), delete k2, insert k3;
     // also two changes to k3 in one batch — only the latest lands
@@ -742,8 +766,8 @@ class StreamingSpec extends AnyFunSuite {
       Change(2L, 20.0, ChangeModel.Delete, 4L),
       Change(3L, 30.0, ChangeModel.Insert, 5L),
       Change(3L, 31.0, ChangeModel.UpdatePost, 6L))
-    graft.sinks.Sinks.upsertJdbc(
-      mem.toDF(), Seq("k"), url, "target_state", s"$tmp/ckpt")
+    graft.sinks.Sinks.upsert(mem.toDF(), Seq("k"),
+      graft.sinks.Sinks.Jdbc(url, "target_state"), s"$tmp/ckpt")
       .awaitTermination()
     val out = spark.read.jdbc(url, "target_state", new java.util.Properties)
       .select("k", "v").collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
