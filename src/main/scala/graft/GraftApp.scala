@@ -163,18 +163,7 @@ object GraftApp {
         s"sink references unknown output table '${sink.table}'")
       require(legalModes(sink.mode),
         s"unknown ${if (config.streaming) "streaming " else ""}sink mode ${sink.mode}")
-      if (sink.mode == "jdbc") requireJdbcAvailable(sink)
-      else if (sink.mode != "dummy" &&
-          !(sink.format == "delta" &&
-            (sink.mode == "upsert" ||
-              (config.streaming && sink.mode == "append") ||
-              (!config.streaming &&
-                (sink.mode == "append" || sink.mode == "overwrite")))) &&
-          !(sink.format == "iceberg" &&
-            (sink.mode == "upsert" || sink.mode == "append" ||
-              (!config.streaming && sink.mode == "overwrite"))))
-        // delta/iceberg batch commits are native — no jar probe
-        requireFormatAvailable(spark, sink.format, "sink")
+      requireSinkAvailable(spark, sink, config.streaming)
       // keys, format and `buckets:` — the same check run makes
       if (sink.mode == "upsert") keyedTarget(sink)
       // partition_by legality + column existence (run would fail at
@@ -432,6 +421,28 @@ object GraftApp {
             "via --jars/spark.jars, exactly like the Kafka/Delta connector jars")
     }
   }
+
+  /** Whether a `format` sink in `mode` commits natively (DeltaLite /
+    * IcebergLite), needing no connector jar: delta and iceberg append
+    * and upsert in both execution modes (streaming ones with the txn
+    * exactly-once protocol), and overwrite in batch.
+    */
+  private[graft] def sinkCommitsNatively(format: String, mode: String,
+      streaming: Boolean): Boolean =
+    (format == "delta" || format == "iceberg") &&
+      (mode == "append" || mode == "upsert" ||
+        (!streaming && mode == "overwrite"))
+
+  /** The classpath check a sink needs before it runs — the same one for
+    * build and run: a loadable driver for jdbc, none for dummy or native
+    * commits, the format's DataSource otherwise.
+    */
+  private def requireSinkAvailable(spark: SparkSession, sink: SinkConf,
+      streaming: Boolean): Unit =
+    if (sink.mode == "jdbc") requireJdbcAvailable(sink)
+    else if (sink.mode != "dummy" &&
+        !sinkCommitsNatively(sink.format, sink.mode, streaming))
+      requireFormatAvailable(spark, sink.format, "sink")
 
   /** Fail fast — at build/validate time, not deep inside a microbatch —
     * when a configured format's DataSource is not on the classpath.
@@ -980,14 +991,7 @@ object GraftApp {
       val df = outputs.getOrElse(sink.table,
         throw new IllegalArgumentException(
           s"sink references unknown output table '${sink.table}'"))
-      if (sink.mode == "jdbc") requireJdbcAvailable(sink)
-      else if (sink.mode != "dummy" &&
-          !((sink.format == "delta" || sink.format == "iceberg") &&
-            (sink.mode == "append" || sink.mode == "overwrite" ||
-              sink.mode == "upsert")))
-        // batch append/overwrite/upsert delta AND iceberg sinks commit
-        // natively (DeltaLite / IcebergLite) — no jar probe needed
-        requireFormatAvailable(spark, sink.format, "sink")
+      requireSinkAvailable(spark, sink, streaming = false)
       // upsert snapshots own their layout — reject a partition spec
       // instead of silently dropping it
       require(sink.partitionBy.isEmpty || sink.mode != "upsert",
@@ -1181,13 +1185,7 @@ object GraftApp {
         throw new IllegalArgumentException(
           s"sink references unknown output table '${sink.table}'"))
       val ckpt = sink.checkpoint.getOrElse(sink.path + "_ckpt")
-      if (sink.mode == "jdbc") requireJdbcAvailable(sink)
-      else if (sink.mode != "dummy" &&
-          !((sink.format == "delta" || sink.format == "iceberg") &&
-            (sink.mode == "append" || sink.mode == "upsert")))
-        // streaming delta/iceberg APPEND/UPSERT commit natively with the
-        // txn exactly-once protocol; other modes keep the jar probe
-        requireFormatAvailable(spark, sink.format, "sink")
+      requireSinkAvailable(spark, sink, streaming = true)
       // keyed sinks own their layout (key-hash buckets, table files) —
       // a user partition spec would be silently unhonored, so reject it
       require(sink.partitionBy.isEmpty || sink.mode == "append",

@@ -24,6 +24,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   */
 object Sinks {
   import graft.cdc.ChangeModel
+  import graft.sources.DeltaLite.KeyStats
 
   /** Label the streaming query (surfaces in StreamingQueryListener
     * progress and the /metrics endpoint as `query="<name>"`).
@@ -97,17 +98,19 @@ object Sinks {
       }
       .start()
 
-  /** Where a keyed sink lands. [[merge]] receives one collapsed batch:
-    * `images` (payload columns, one row per key) to replace or insert,
-    * and `deleteKeys` (key columns, disjoint from the images' keys) to
-    * remove. A missing table is created by the first merge.
+  /** Where a keyed sink lands. [[merge]] receives one collapsed,
+    * non-empty batch: `images` (payload columns, one row per key) to
+    * replace or insert, `deleteKeys` (key columns, disjoint from the
+    * images' keys) to remove, and `stats`, their key set's count, null
+    * key cells and ranges. A missing table is created by the first merge.
     * `txn` = (stable per-sink app id, batch id) for the formats whose
     * log records it, so a retried batch is skipped by the table itself;
     * the others merge idempotently (replace-by-key re-applied converges).
     */
   sealed trait Target {
     def merge(spark: SparkSession, images: DataFrame, deleteKeys: DataFrame,
-        keyCols: Seq[String], txn: Option[(String, Long)]): Unit
+        keyCols: Seq[String], txn: Option[(String, Long)],
+        stats: KeyStats): Unit
   }
 
   /** Native Delta copy-on-write MERGE ([[graft.sources.DeltaLite.upsert]]):
@@ -118,9 +121,11 @@ object Sinks {
   final case class Delta(path: String,
       configuration: Map[String, String] = Map.empty) extends Target {
     def merge(spark: SparkSession, images: DataFrame, deleteKeys: DataFrame,
-        keyCols: Seq[String], txn: Option[(String, Long)]): Unit = {
+        keyCols: Seq[String], txn: Option[(String, Long)],
+        stats: KeyStats): Unit = {
       graft.sources.DeltaLite.upsert(spark, images, path, keyCols, txn = txn,
-        deleteKeys = Some(deleteKeys), configuration = configuration)
+        deleteKeys = Some(deleteKeys), configuration = configuration,
+        collapsedKeyStats = Some(stats))
       ()
     }
   }
@@ -131,7 +136,8 @@ object Sinks {
     */
   final case class Iceberg(path: String) extends Target {
     def merge(spark: SparkSession, images: DataFrame, deleteKeys: DataFrame,
-        keyCols: Seq[String], txn: Option[(String, Long)]): Unit = {
+        keyCols: Seq[String], txn: Option[(String, Long)],
+        stats: KeyStats): Unit = {
       graft.sources.IcebergLite.upsert(spark, images, path, keyCols,
         deleteKeys = Some(deleteKeys), txn = txn)
       ()
@@ -160,7 +166,8 @@ object Sinks {
   final case class BucketedParquet(path: String, numBuckets: Int = 1)
       extends Target {
     def merge(spark: SparkSession, images: DataFrame, deleteKeys: DataFrame,
-        keyCols: Seq[String], txn: Option[(String, Long)]): Unit = {
+        keyCols: Seq[String], txn: Option[(String, Long)],
+        stats: KeyStats): Unit = {
       import org.apache.hadoop.fs.Path
       import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
       val bucketOf = pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets))
@@ -255,7 +262,8 @@ object Sinks {
   final case class Jdbc(url: String, table: String,
       props: java.util.Properties = new java.util.Properties) extends Target {
     def merge(spark: SparkSession, images: DataFrame, deleteKeys: DataFrame,
-        keyCols: Seq[String], txn: Option[(String, Long)]): Unit = {
+        keyCols: Seq[String], txn: Option[(String, Long)],
+        stats: KeyStats): Unit = {
       import org.apache.spark.sql.functions.lit
       val Op = ChangeModel.OpCol
       val staging = table + "_staging"
@@ -334,15 +342,25 @@ object Sinks {
       else batch
         .withColumn(OpCol, lit(ChangeModel.Insert))
         .withColumn(SeqCol, monotonically_increasing_id())
-    val latest = ChangeModel.latestRows(changes, keyCols)
-      .localCheckpoint() // one row per key, reused for both splits
+    // the key stats ride the checkpoint's own job as observed metrics —
+    // no separate pass for the empty check or the merge's key ranges —
+    // read from its executed plan once the checkpoint returns (an
+    // Observation would wait for the listener bus to deliver them)
+    val collapsed = ChangeModel.latestRows(changes, keyCols)
+    val statCols = KeyStats.columns(collapsed.schema, keyCols)
+    val observed = collapsed.observe("key_stats", statCols.head,
+      statCols.tail: _*)
+    // one row per key, reused for both splits
+    val latest = observed.localCheckpoint()
     try {
-      if (!latest.isEmpty)
+      val metrics = observed.queryExecution.observedMetrics("key_stats")
+      val stats = KeyStats.of(metrics.getAs[Any], collapsed.schema, keyCols)
+      if (stats.rows > 0)
         target.merge(batch.sparkSession,
           latest.filter(col(OpCol) === ChangeModel.Insert).drop(OpCol, SeqCol),
           latest.filter(col(OpCol) === ChangeModel.Delete)
             .select(keyCols.map(col): _*),
-          keyCols, txn)
+          keyCols, txn, stats)
     } finally {
       // the checkpoint's blocks ARE its data and otherwise stay in the
       // block manager until a GC happens to reclaim the RDD: drop them

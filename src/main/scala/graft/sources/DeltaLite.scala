@@ -4251,6 +4251,48 @@ object DeltaLite {
     }
   }
 
+  /** What an upsert needs to know of its touched-key set (batch keys
+    * plus delete keys) before it opens the table: the row count, the
+    * null key cells, and `ranges`, the [min,max] pruning bound of each
+    * stats-eligible key column that holds a non-null value.
+    */
+  final case class KeyStats(rows: Long, nullKeyCells: Long,
+      ranges: Map[String, (Any, Any)])
+
+  object KeyStats {
+    private def eligible(schema: StructType, keyCols: Seq[String]) =
+      schema.fields.filter(f => keyCols.contains(f.name) && statsEligible(f))
+        .toSeq
+
+    /** The aggregate columns [[KeyStats]] reads back through [[of]], for
+      * any frame (or observation) over rows carrying `keyCols`. */
+    def columns(schema: StructType, keyCols: Seq[String])
+        : Seq[org.apache.spark.sql.Column] = {
+      import org.apache.spark.sql.functions.{count, max, min, sum}
+      Seq(count(lit(1)).as("__n"),
+        sum(keyCols.map(c => col(c).isNull.cast("long")).reduce(_ + _))
+          .as("__nulls")) ++
+        eligible(schema, keyCols).flatMap(f => Seq(
+          min(col(f.name)).as(s"__min__${f.name}"),
+          max(col(f.name)).as(s"__max__${f.name}")))
+    }
+
+    /** Read [[columns]]' values back; `value` looks one up by name. */
+    def of(value: String => Any, schema: StructType,
+        keyCols: Seq[String]): KeyStats = {
+      val rows = value("__n").asInstanceOf[Long]
+      KeyStats(rows,
+        // sum over no rows is null
+        if (rows == 0) 0L else value("__nulls").asInstanceOf[Long],
+        eligible(schema, keyCols).flatMap { f =>
+          for {
+            lo <- toBound(value(s"__min__${f.name}"))
+            hi <- toBound(value(s"__max__${f.name}"))
+          } yield f.name -> (lo, hi)
+        }.toMap)
+    }
+  }
+
   /** Keyed UPSERT (MERGE) into a native Delta table at O(touched
     * files): each batch row replaces the live row with the same key, or
     * inserts if the key is absent — the reference's ReplacingMergeTree
@@ -4281,13 +4323,21 @@ object DeltaLite {
     * A missing table is created by the first non-empty upsert, with
     * `configuration` stamped as its table properties (as [[write]]
     * does). Returns the table version.
+    *
+    * `collapsedKeyStats`: the [[KeyStats]] of `batch` ∪ `deleteKeys`,
+    * given by a caller that built both from one collapsed, materialized
+    * frame (one row per key — [[graft.sinks.Sinks.upsertBatch]] observes
+    * them during its collapse). The upsert then runs no aggregation of
+    * its own and skips the distinct-key check the collapse guarantees;
+    * the null-key and empty-batch checks still hold.
     */
   def upsert(spark: SparkSession, batch: DataFrame, tablePath: String,
       keyCols: Seq[String], txn: Option[(String, Long)] = None,
       deleteKeys: Option[DataFrame] = None,
-      configuration: Map[String, String] = Map.empty): Long = {
-    import org.apache.spark.sql.functions.{col, count, countDistinct, lit,
-      max, min, struct, sum}
+      configuration: Map[String, String] = Map.empty,
+      collapsedKeyStats: Option[KeyStats] = None): Long = {
+    import org.apache.spark.sql.functions.{broadcast, col, countDistinct,
+      struct}
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     keyCols.foreach(k => require(batch.columns.contains(k),
       s"key column '$k' missing from the batch (${batch.columns.mkString(", ")})"))
@@ -4301,47 +4351,54 @@ object DeltaLite {
     // the keys this commit touches: batch keys to replace/insert plus
     // delete keys to remove — pruning and touch detection use the union
     val delKeysDf = deleteKeys.map(_.select(keyCols.map(col): _*))
-    // the key set is consumed by 3-4 jobs (stats agg, touched-set
-    // semi-join, retained-rows anti-join, CDF classification) — persist
-    // the keys-only projection so the batch's full lineage (often a
-    // table read itself) evaluates once
-    val allKeysDf = delKeysDf
+    val keysDf = delKeysDf
       .map(batch.select(keyCols.map(col): _*).unionByName(_))
       .getOrElse(batch.select(keyCols.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the key set feeds the stats aggregation, the touched-file probe,
+    // the rewrite's anti-join and CDF classification: persist the
+    // keys-only projection so an arbitrary batch lineage (often a table
+    // read itself) evaluates once. Collapsed input is materialized
+    // already and needs neither the persist nor the aggregation.
+    val ownStats = collapsedKeyStats.isEmpty
+    val allKeysDf =
+      if (ownStats)
+        keysDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else keysDf
+    def release(): Unit = if (ownStats) { allKeysDf.unpersist(); () }
 
-    // one pass over the touched-key set: sizes, key distinctness, null
-    // keys, and the per-column key ranges the pruning step needs. A key
-    // in both batch and deletes double-counts in __n vs __nd and trips
-    // the distinctness require — exactly the contract error it is.
-    val eligibleKeys = batch.schema.fields
-      .filter(f => keyCols.contains(f.name) && statsEligible(f)).toSeq
-    val aggs = Seq(count(lit(1)).as("__n"),
-      countDistinct(struct(keyCols.map(col): _*)).as("__nd"),
-      sum(keyCols.map(c => col(c).isNull.cast("long"))
-        .reduce(_ + _)).as("__nulls")) ++
-      eligibleKeys.flatMap(f => Seq(min(col(f.name)).as(s"__min__${f.name}"),
-        max(col(f.name)).as(s"__max__${f.name}")))
-    val r = allKeysDf.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val n = r.getAs[Long]("__n")
+    val (stats, distinctKeys) = collapsedKeyStats match {
+      case Some(s) => (s, s.rows)
+      case None =>
+        // one pass over the touched-key set: sizes, key distinctness,
+        // null keys, and the per-column key ranges the pruning step
+        // needs. A key in both batch and deletes double-counts in __n vs
+        // __nd and trips the distinctness require — exactly the contract
+        // error it is.
+        val aggs = KeyStats.columns(batch.schema, keyCols) :+
+          countDistinct(struct(keyCols.map(col): _*)).as("__nd")
+        val r = allKeysDf.agg(aggs.head, aggs.tail: _*).collect()(0)
+        (KeyStats.of(r.getAs[Any], batch.schema, keyCols),
+          r.getAs[Long]("__nd"))
+    }
+    val n = stats.rows
     if (n == 0) {
       // no-op batch: no commit; version stays (or the table may not
       // exist yet — creating an empty table from nothing is surprising)
-      allKeysDf.unpersist()
+      release()
       return if (fs.exists(logDir)) snapshot(spark, tablePath).version
       else throw new IllegalArgumentException(
         s"upsert of an empty batch cannot create table $tablePath")
     }
-    require(r.getAs[Long]("__nulls") == 0,
-      s"upsert batch carries ${r.getAs[Long]("__nulls")} null key cells " +
+    require(stats.nullKeyCells == 0,
+      s"upsert batch carries ${stats.nullKeyCells} null key cells " +
         s"(keys ${keyCols.mkString(", ")}) — replace-by-key needs non-null keys")
-    require(r.getAs[Long]("__nd") == n,
+    require(distinctKeys == n,
       s"upsert keys must be distinct across batch and deletes: $n key " +
-        s"rows but only ${r.getAs[Long]("__nd")} distinct keys — collapse " +
+        s"rows but only $distinctKeys distinct keys — collapse " +
         "the batch (e.g. ChangeModel.latestRows) before upserting")
 
     if (!fs.exists(logDir)) {
-      allKeysDf.unpersist()
+      release()
       return write(spark, batch, tablePath, "append", txn,
         configuration = configuration)
     }
@@ -4370,7 +4427,7 @@ object DeltaLite {
       }
     txn.foreach { case (appId, v) =>
       if (snap.txns.get(appId).exists(_ >= v)) {
-        allKeysDf.unpersist(); return snap.version
+        release(); return snap.version
       }
     }
     require(normalizeNullability(snap.schema) == normalizeNullability(batch.schema),
@@ -4382,13 +4439,7 @@ object DeltaLite {
     enforceConstraints(snap.configuration, snap.schema, batch, tablePath,
       extra = generatedChecks(snap.schema, batch.columns.toSeq))
 
-    val batchRanges: Map[String, (Any, Any)] = eligibleKeys.flatMap { f =>
-      for {
-        lo <- toBound(r.getAs[Any](s"__min__${f.name}"))
-        hi <- toBound(r.getAs[Any](s"__max__${f.name}"))
-      } yield f.name -> (lo, hi)
-    }.toMap
-    val candidates = pruneCandidates(snap, batchRanges)
+    val candidates = pruneCandidates(snap, stats.ranges)
 
     def abs(p: String): String =
       if (p.contains("://") || p.startsWith("/")) p
@@ -4415,16 +4466,31 @@ object DeltaLite {
       scanFilesWithMeta(spark, tablePath, snap, files, withPos = false,
         rowIds = withIds)
 
+    // a key set that fits Spark's broadcast threshold joins as a
+    // broadcast into the touched-file probe and the rewrite's anti-join:
+    // no shuffle of the candidate rows, and no plan that needs the key
+    // set persisted to stay cheap. Larger key sets plan as Spark sees fit.
+    val keyBytes = keyCols.map(k => batch.schema(k).dataType.defaultSize).sum
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val joinKeys =
+      if (threshold >= 0 && n * keyBytes <= threshold) broadcast(allKeysDf)
+      else allKeysDf
+
+    // each task reports the set of files its rows came from (no
+    // shuffle for a distinct), unioned once collected
     val touched: Set[String] =
       if (candidates.isEmpty) Set.empty
       else groupScan(candidates)
-        .join(allKeysDf, keyCols, "left_semi")
-        .select("__file").distinct().collect()
-        .map { row =>
-          val norm = IcebergLite.normalizePathStr(row.getString(0))
+        .join(joinKeys, keyCols, "left_semi")
+        .select("__file").as(org.apache.spark.sql.Encoders.STRING)
+        .mapPartitions(files => files.toSet.iterator)(
+          org.apache.spark.sql.Encoders.STRING)
+        .collect().toSet
+        .map { (file: String) =>
+          val norm = IcebergLite.normalizePathStr(file)
           relByPath.getOrElse(norm, throw new IllegalStateException(
-            s"semi-join returned unmapped file ${row.getString(0)}"))
-        }.toSet
+            s"semi-join returned unmapped file $file"))
+        }
 
     // rewrite = retained rows of the touched files (neither replaced
     // nor deleted) + the whole batch (rows with brand-new keys land in
@@ -4475,7 +4541,7 @@ object DeltaLite {
           case None => batchF
           case Some(touchedRows) =>
             touchedRows
-              .join(allKeysDf, keyCols, "left_anti")
+              .join(joinKeys, keyCols, "left_anti")
               .unionByName(batchF)
               .select(dataColsSel: _*)
         }
@@ -4492,7 +4558,7 @@ object DeltaLite {
               .withColumn("_row_commit_version", lit(null).cast("long"))
           case Some(touchedRows) =>
             val retained = touchedRows
-              .join(allKeysDf, keyCols, "left_anti")
+              .join(joinKeys, keyCols, "left_anti")
               .select(dataColsSel ++ idColsSel: _*)
             // deterministic inherit under (foreign) duplicate keys
             val oldIds = touchedRows
@@ -4608,7 +4674,7 @@ object DeltaLite {
     val committed = commitWithRetry(fs, logDir, tablePath, version,
       lines.toSeq, ourRemoves = touched, dataChangeMutation = true)
     idRelease()
-    allKeysDf.unpersist()
+    release()
     autoSyncUniform(spark, tablePath, Some(snap), committed)
   }
 

@@ -503,6 +503,78 @@ class DeltaLiteSpec extends AnyFunSuite {
     assert(DeltaLite.snapshot(spark, tbl).version == vBefore)
   }
 
+  /** A one-file Delta table of keys 1..200 → "v<k>". */
+  private def seededTable(prefix: String): String = {
+    val t = java.nio.file.Files.createTempDirectory(prefix).toString + "/tbl"
+    DeltaLite.write(spark,
+      (1L to 200L).map(k => (k, s"v$k")).toDF("k", "v").coalesce(1), t)
+    t
+  }
+
+  private def keyedRows(t: String): Map[Long, String] =
+    DeltaLite.read(spark, t).as[(Long, String)].collect().toMap
+
+  /** Updates (k=1 twice, k=3), a delete (k=2) and an insert (k=500). */
+  private def changeBatch: DataFrame = Seq(
+    (1L, "A", "update_postimage", 1L), (2L, "b", "delete", 2L),
+    (500L, "new", "insert", 3L), (1L, "AA", "update_postimage", 4L),
+    (3L, "C", "update_postimage", 5L)).toDF("k", "v", "_op", "_seq")
+
+  private def afterChangeBatch: Map[Long, String] =
+    (1L to 200L).map(k => k -> s"v$k").toMap - 2L +
+      (1L -> "AA") + (3L -> "C") + (500L -> "new")
+
+  test("one keyed-sink micro-batch into an existing Delta table runs at " +
+      "most 7 Spark jobs in 3 SQL executions") {
+    val t = seededTable("delta_jobs")
+    val counted = org.apache.spark.graft.JobCount(spark) {
+      graft.sinks.Sinks.upsertBatch(changeBatch, Seq("k"),
+        graft.sinks.Sinks.Delta(t), Some(("jobs", 1L)))
+    }
+    // collapse + checkpoint (stats observed on its job), the touched-file
+    // probe, the rewrite
+    info(s"${counted.jobs} jobs in ${counted.sqlExecutions} SQL executions")
+    assert(counted.jobs <= 7 && counted.sqlExecutions <= 3,
+      s"${counted.jobs} jobs in ${counted.sqlExecutions} SQL executions")
+    assert(keyedRows(t) == afterChangeBatch)
+  }
+
+  test("keyed-sink contract through the collapse-observed stats: a null " +
+      "key raises, an empty batch commits nothing and creates no table") {
+    val t = seededTable("delta_sinkcontract")
+    val v0 = DeltaLite.snapshot(spark, t).version
+    val withNull = Seq((Option(5L), "x"), (Option.empty[Long], "y"))
+      .toDF("k", "v")
+    val eNull = intercept[IllegalArgumentException](
+      graft.sinks.Sinks.upsertBatch(withNull, Seq("k"),
+        graft.sinks.Sinks.Delta(t)))
+    assert(eNull.getMessage.contains("null key"), eNull.getMessage)
+    assert(DeltaLite.snapshot(spark, t).version == v0)
+    val empty = changeBatch.filter("k < 0")
+    graft.sinks.Sinks.upsertBatch(empty, Seq("k"), graft.sinks.Sinks.Delta(t))
+    assert(DeltaLite.snapshot(spark, t).version == v0)
+    val missing =
+      java.nio.file.Files.createTempDirectory("delta_sinkempty").toString +
+        "/tbl"
+    graft.sinks.Sinks.upsertBatch(empty, Seq("k"),
+      graft.sinks.Sinks.Delta(missing))
+    assert(!new java.io.File(missing).exists)
+  }
+
+  test("a key set above spark.sql.autoBroadcastJoinThreshold merges " +
+      "through the shuffled plan to the same rows") {
+    val t = seededTable("delta_nobcast")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    // 4 keys × 8 bytes: over the threshold
+    spark.conf.set(key, "16")
+    try {
+      graft.sinks.Sinks.upsertBatch(changeBatch, Seq("k"),
+        graft.sinks.Sinks.Delta(t))
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(keyedRows(t) == afterChangeBatch)
+  }
+
   test("checkpoint preserves stats: pruning still works when the state " +
       "is seeded from the checkpoint") {
     val t = java.nio.file.Files.createTempDirectory("delta_ckstats").toString + "/tbl"

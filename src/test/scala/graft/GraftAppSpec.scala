@@ -2688,4 +2688,52 @@ class GraftAppSpec extends AnyFunSuite {
     assert(graft.sources.DeltaLite.read(spark, s"$tmp/tbl").count() == 2)
   }
 
+  test("one native-commit rule: build and run agree for every sink " +
+      "format × mode × execution mode") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_native_rule").toString
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$tmp/src")
+    // (format, mode) -> commits natively in (batch, streaming); no
+    // connector jar is on the test classpath, and streaming has no
+    // overwrite mode, so the only refused combination is streaming
+    // overwrite
+    val rule = Seq(
+      ("delta", "append") -> ((true, true)),
+      ("delta", "overwrite") -> ((true, false)),
+      ("delta", "upsert") -> ((true, true)),
+      ("iceberg", "append") -> ((true, true)),
+      ("iceberg", "overwrite") -> ((true, false)),
+      ("iceberg", "upsert") -> ((true, true)),
+      ("parquet", "append") -> ((false, false)),
+      ("parquet", "overwrite") -> ((false, false)),
+      ("parquet", "upsert") -> ((false, false)))
+    for {
+      ((format, mode), (nativeBatch, nativeStreaming)) <- rule
+      streaming <- Seq(false, true)
+    } {
+      val label = s"$format $mode ${if (streaming) "streaming" else "batch"}"
+      assert(GraftApp.sinkCommitsNatively(format, mode, streaming) ==
+        (if (streaming) nativeStreaming else nativeBatch), label)
+      val config = GraftConfigLoader.fromYaml(
+        s"""sources:
+           |  - name: pt
+           |    path: $tmp/src
+           |sql: SELECT k, v INTO o FROM pt;
+           |sinks:
+           |  - table: o
+           |    path: $tmp/${label.replace(' ', '_')}
+           |    format: $format
+           |    mode: $mode
+           |    keys: [k]
+           |streaming: $streaming
+           |""".stripMargin)
+      val built = scala.util.Try(GraftApp.build(spark, config))
+      val ran = scala.util.Try(
+        if (streaming) runToEnd(config) else { runBatch(spark, config); () })
+      assert(built.isSuccess == ran.isSuccess, s"$label: build $built, run $ran")
+      assert(built.isSuccess == !(streaming && mode == "overwrite"),
+        s"$label: build $built")
+    }
+  }
+
 }
