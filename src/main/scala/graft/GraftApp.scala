@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
+import graft.sinks.Sinks
 import graft.sql.GraftSqlRunner
 
 /** Config-driven orchestrator — dozer's `dozer run` lifecycle
@@ -146,55 +147,40 @@ object GraftApp {
     * return each output table's schema. No sink is written.
     */
   def build(spark: SparkSession, config: GraftConfig): Map[String, StructType] = {
+    val analyzed = analyze(spark, config, config.streaming)
+    analyzed.sinks.foreach { case (sink, df) =>
+      sinkPlan(spark, sink, df, config.streaming)
+    }
+    analyzed.outputs.map { case (t, df) => t -> df.schema }
+  }
+
+  /** A config's front half, shared by every entry point: each source with
+    * its frame, each INTO output, and each sink with the output it writes.
+    */
+  private final case class Analyzed(sources: Seq[(SourceConf, DataFrame)],
+      outputs: Map[String, DataFrame], sinks: Seq[(SinkConf, DataFrame)])
+
+  /** Register the config's UDFs, load and register every source (as
+    * streams when `streaming`), and run the SQL (Catalyst analysis is
+    * eager, so unknown columns, tables and functions fail here). No Spark
+    * job runs and no sink is touched.
+    */
+  private def analyze(spark: SparkSession, config: GraftConfig,
+      streaming: Boolean): Analyzed = {
     registerUdfs(spark, config)
-    val runner = new GraftSqlRunner(spark, streaming = config.streaming)
-    config.sources.foreach { s =>
+    val runner = new GraftSqlRunner(spark, streaming = streaming)
+    val sources = config.sources.map { s =>
       requireFormatAvailable(spark, s.format, "source")
-      runner.registerSource(s.name, loadSource(spark, s, config.streaming))
+      val df = loadSource(spark, s, streaming)
+      runner.registerSource(s.name, df)
+      (s, df)
     }
     val outputs = runner.run(config.sql)
-    // legal modes differ by execution mode — mirror run's dispatch so
-    // build rejects exactly what run would reject
-    val legalModes =
-      if (config.streaming) Set("append", "upsert", "dummy", "jdbc")
-      else Set("append", "overwrite", "upsert", "dummy", "jdbc")
-    config.sinks.foreach { sink =>
-      require(outputs.contains(sink.table),
-        s"sink references unknown output table '${sink.table}'")
-      require(legalModes(sink.mode),
-        s"unknown ${if (config.streaming) "streaming " else ""}sink mode ${sink.mode}")
-      requireSinkAvailable(spark, sink, config.streaming)
-      // keys, format and `buckets:` — the same check run makes
-      if (sink.mode == "upsert") keyedTarget(sink)
-      // partition_by legality + column existence (run would fail at
-      // write time with a deep AnalysisException; surface it here)
-      if (sink.partitionBy.nonEmpty) {
-        val legal = if (config.streaming) sink.mode == "append"
-          else sink.mode != "upsert"
-        require(legal,
-          s"partition_by is not supported on ${sink.mode} sinks (sink '${sink.table}')")
-        val cols = outputs(sink.table).schema.fieldNames.toSet
-        val missing = sink.partitionBy.filterNot(cols)
-        require(missing.isEmpty,
-          s"partition_by columns ${missing.mkString(", ")} not in output " +
-            s"'${sink.table}' (has ${cols.mkString(", ")})")
-      }
-      // zorder_by gets the same build-time surface (arity, mode, columns)
-      if (sink.zorderBy.nonEmpty) {
-        require(!config.streaming &&
-          (sink.mode == "append" || sink.mode == "overwrite"),
-          s"zorder_by is only supported on batch append/overwrite sinks " +
-            s"(sink '${sink.table}')")
-        require(sink.zorderBy.size >= 2 && sink.zorderBy.size <= 3,
-          s"zorder_by takes 2 or 3 columns (sink '${sink.table}')")
-        val cols = outputs(sink.table).schema.fieldNames.toSet
-        val missing = sink.zorderBy.filterNot(cols)
-        require(missing.isEmpty,
-          s"zorder_by columns ${missing.mkString(", ")} not in output " +
-            s"'${sink.table}' (has ${cols.mkString(", ")})")
-      }
-    }
-    outputs.map { case (t, df) => t -> df.schema }
+    Analyzed(sources, outputs, config.sinks.map { sink =>
+      sink -> outputs.getOrElse(sink.table,
+        throw new IllegalArgumentException(
+          s"sink references unknown output table '${sink.table}'"))
+    })
   }
 
   /** The build contract — a deterministic text rendering of everything
@@ -272,14 +258,8 @@ object GraftApp {
     */
   def uiContract(spark: SparkSession,
       config: GraftConfig): UiServer.Contract = {
-    registerUdfs(spark, config)
-    val runner = new GraftSqlRunner(spark, streaming = config.streaming)
-    val sourceDfs = config.sources.map { s =>
-      val df = loadSource(spark, s, config.streaming)
-      runner.registerSource(s.name, df)
-      (s, df)
-    }
-    val outputs = runner.run(config.sql)
+    val Analyzed(sourceDfs, outputs, _) =
+      analyze(spark, config, config.streaming)
     val known = config.sources.map(_.name).toSet ++ outputs.keySet
     def directRefs(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
         : Set[String] = plan match {
@@ -379,7 +359,7 @@ object GraftApp {
   final case class SinkConf(
       table: String,                          // an INTO output name
       path: String,
-      mode: String = "append",                // "append" | "upsert" | "overwrite"
+      mode: String = "append",                // "append" | "overwrite" | "upsert" | "jdbc" | "dummy"
       keys: Seq[String] = Nil,                // primary key for upsert
       checkpoint: Option[String] = None,
       buckets: Option[Int] = None,            // upsert scale path: hash-bucketed snapshot
@@ -400,8 +380,8 @@ object GraftApp {
   private val builtinFormats =
     Set("parquet", "csv", "json", "orc", "text", "avro", "binaryFile")
 
-  /** Fail fast for JDBC sinks: the url must be present and its driver
-    * loadable (explicit `driver` option or DriverManager url probe) —
+  /** Fail fast for JDBC sinks: the url and target table must be present
+    * and the driver loadable (explicit `driver` option or DriverManager url probe) —
     * same build-time contract as [[requireFormatAvailable]]. The
     * ClickHouse/Oracle jars are deployment-supplied, like the Kafka
     * and Delta connector jars.
@@ -410,6 +390,8 @@ object GraftApp {
     val url = sink.options.getOrElse("url",
       throw new IllegalArgumentException(
         s"jdbc sink '${sink.table}' needs options.url"))
+    require(sink.options.contains("dbtable"),
+      s"jdbc sink '${sink.table}' needs options.dbtable")
     try sink.options.get("driver") match {
       case Some(d) => Class.forName(d)
       case None => java.sql.DriverManager.getDriver(url)
@@ -421,28 +403,6 @@ object GraftApp {
             "via --jars/spark.jars, exactly like the Kafka/Delta connector jars")
     }
   }
-
-  /** Whether a `format` sink in `mode` commits natively (DeltaLite /
-    * IcebergLite), needing no connector jar: delta and iceberg append
-    * and upsert in both execution modes (streaming ones with the txn
-    * exactly-once protocol), and overwrite in batch.
-    */
-  private[graft] def sinkCommitsNatively(format: String, mode: String,
-      streaming: Boolean): Boolean =
-    (format == "delta" || format == "iceberg") &&
-      (mode == "append" || mode == "upsert" ||
-        (!streaming && mode == "overwrite"))
-
-  /** The classpath check a sink needs before it runs — the same one for
-    * build and run: a loadable driver for jdbc, none for dummy or native
-    * commits, the format's DataSource otherwise.
-    */
-  private def requireSinkAvailable(spark: SparkSession, sink: SinkConf,
-      streaming: Boolean): Unit =
-    if (sink.mode == "jdbc") requireJdbcAvailable(sink)
-    else if (sink.mode != "dummy" &&
-        !sinkCommitsNatively(sink.format, sink.mode, streaming))
-      requireFormatAvailable(spark, sink.format, "sink")
 
   /** Fail fast — at build/validate time, not deep inside a microbatch —
     * when a configured format's DataSource is not on the classpath.
@@ -874,17 +834,139 @@ object GraftApp {
     } else raw
   }
 
+  /** Every rule of one sink, decided once for build, batch and streaming
+    * runs, and the write that lands one batch of its `output`. `build`
+    * drops the write, a batch run applies it once with `txn` None, and a
+    * streaming run hands it to [[Sinks.stream]]. Checks, in order: the
+    * mode is legal in this execution mode; partition_by and zorder_by fit
+    * the mode and name columns of `output`; the sink's connector, driver,
+    * keys and checkpoint are there. The classpath probes resolve here,
+    * never per batch. Runs no Spark job and touches no sink path.
+    */
+  private def sinkPlan(spark: SparkSession, sink: SinkConf,
+      output: DataFrame, streaming: Boolean): Sinks.Write = {
+    val modes = Set("append", "upsert", "dummy", "jdbc") ++
+      (if (streaming) Set.empty[String] else Set("overwrite"))
+    require(modes(sink.mode),
+      s"unknown ${if (streaming) "streaming " else ""}sink mode ${sink.mode}")
+    val cols = output.schema.fieldNames.toSet
+    def requireColumns(what: String, named: Seq[String]): Unit = {
+      val missing = named.filterNot(cols)
+      require(missing.isEmpty,
+        s"$what columns ${missing.mkString(", ")} not in output " +
+          s"'${sink.table}' (has ${cols.mkString(", ")})")
+    }
+    val filesWritten = sink.mode == "append" || sink.mode == "overwrite"
+    // keyed sinks own their layout (key-hash buckets, table files) and
+    // jdbc/dummy write no files: a partition spec there would go unhonored
+    require(sink.partitionBy.isEmpty || filesWritten,
+      s"partition_by is not supported on ${sink.mode} sinks (sink '${sink.table}')")
+    requireColumns("partition_by", sink.partitionBy)
+    // delta and iceberg commit natively (DeltaLite/IcebergLite) unless
+    // the connector jar is on the classpath; probed only for the modes
+    // that can use it
+    lazy val nativeDelta = sink.format == "delta" && !deltaSourceAvailable(spark)
+    lazy val nativeIceberg =
+      sink.format == "iceberg" && !formatOnClasspath(spark, "iceberg")
+    // zorder_by clusters a batch write on the Morton key of 2-3 dimension
+    // columns so every file's min/max statistics prune scans on any of
+    // them (operators.Layout); orthogonal to partition_by (dirs split
+    // first, files cluster within)
+    if (sink.zorderBy.nonEmpty) {
+      require(!streaming && filesWritten,
+        s"zorder_by is only supported on batch append/overwrite sinks " +
+          s"(sink '${sink.table}')")
+      require(!nativeDelta && !nativeIceberg,
+        s"${sink.format} sink '${sink.table}': zorder_by needs the " +
+          s"${sink.format} connector jar's layout control")
+      require(sink.zorderBy.size >= 2 && sink.zorderBy.size <= 3,
+        s"zorder_by takes 2 or 3 columns (sink '${sink.table}')")
+      requireColumns("zorder_by", sink.zorderBy)
+    }
+    sink.mode match {
+      case "dummy" =>
+        // reference Dummy sink (sink.rs:127-129): consume, write nothing
+        (batch, txn) => println(s"[graft] dummy sink '${sink.table}'" +
+          txn.fold("")(t => s" batch ${t._2}") + s": ${batch.count()} rows")
+      case "jdbc" if sink.keys.isEmpty && !streaming =>
+        requireJdbcAvailable(sink)
+        val (url, table, props) =
+          (sink.options("url"), sink.options("dbtable"), jdbcProps(sink))
+        (batch, _) => batch.write.mode("append").jdbc(url, table, props)
+      case "jdbc" | "upsert" =>
+        if (sink.mode == "jdbc") {
+          requireJdbcAvailable(sink)
+          require(!streaming || sink.checkpoint.nonEmpty,
+            s"streaming jdbc sink '${sink.table}' needs a checkpoint for " +
+              "exactly-once resume")
+        }
+        // one collapse → merge body; the txn lets delta/iceberg skip a
+        // retried batch
+        val target = keyedTarget(sink)
+        (batch, txn) => Sinks.upsertBatch(batch, sink.keys, target, txn)
+      case _ if nativeDelta =>
+        // DeltaLite.write: put-if-absent version claim + OCC retry;
+        // partition_by maps to the hive-layout partitioned writer (q143).
+        // `options.enable_change_data_feed: true` and
+        // `options.property.<key>` stamp table properties at creation.
+        val configuration = deltaTableProps(sink)
+        (batch, txn) => {
+          graft.sources.DeltaLite.write(batch.sparkSession, batch, sink.path,
+            sink.mode, txn = txn, partitionBy = sink.partitionBy,
+            configuration = configuration)
+          ()
+        }
+      case _ if nativeIceberg =>
+        // IcebergLite.write: format-version 2, put-if-absent metadata
+        // claim; partition_by maps to an IDENTITY partition spec; `options.write_format: orc|avro`
+        // picks the data file format (stamped as write.format.default at
+        // creation); `options.property.<key>` stamps creation table
+        // properties; `options.to_branch` stages onto a named branch (the
+        // WAP pattern — publish later with rollback_to_snapshot of the
+        // branch head).
+        val properties = tableProperties(sink)
+        (batch, txn) => {
+          graft.sources.IcebergLite.write(batch.sparkSession, batch,
+            sink.path, sink.mode, txn = txn, partitionBy = sink.partitionBy,
+            format = sink.options.get("write_format"),
+            properties = properties, toBranch = sink.options.get("to_branch"))
+          ()
+        }
+      case _ =>
+        requireFormatAvailable(spark, sink.format, "sink")
+        val files = Sinks.FileWrite(sink.format, sink.path, sink.mode,
+          sink.partitionBy, sink.options - "zorder_files")
+        if (sink.zorderBy.isEmpty) files
+        else (batch, txn) => files(zordered(batch, sink), txn)
+    }
+  }
+
+  /** `df` range-partitioned and sorted on the Morton key of the sink's
+    * zorder_by columns. `options.zorder_files` pins the file count (an
+    * explicit repartition AQE won't coalesce); without it the session's
+    * shuffle parallelism decides and AQE may merge small outputs.
+    */
+  private def zordered(df: DataFrame, sink: SinkConf): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val keyed = df.withColumn("__z",
+      graft.operators.Layout.mortonKey(sink.zorderBy.map(col)))
+    val ranged = sink.options.get("zorder_files") match {
+      case Some(n) => keyed.repartitionByRange(n.toInt, col("__z"))
+      case None => keyed.repartitionByRange(col("__z"))
+    }
+    ranged.sortWithinPartitions("__z").drop("__z")
+  }
+
   /** Where a keyed sink (`mode: upsert`, or `mode: jdbc` with keys)
-    * merges — one mapping for build, batch and streaming runs, which
-    * all hand it to [[graft.sinks.Sinks.upsertBatch]]. Parquet upserts
+    * merges; [[sinkPlan]] hands it to [[graft.sinks.Sinks.upsertBatch]]
+    * for batch and streaming runs alike. Parquet upserts
     * keep the crash-safe bucketed snapshot (no `buckets:` = one bucket,
     * the layout either run mode maintains, so a stream can take over a
     * batch-written snapshot); delta commits a native copy-on-write
     * MERGE (only files holding touched keys are rewritten); iceberg a
     * native merge-on-read snapshot (position deletes + batch data).
     */
-  private[graft] def keyedTarget(sink: SinkConf): graft.sinks.Sinks.Target = {
-    import graft.sinks.Sinks
+  private def keyedTarget(sink: SinkConf): Sinks.Target = {
     require(sink.keys.nonEmpty,
       s"${sink.mode} sink '${sink.table}' needs keys (the merge key)")
     if (sink.mode == "jdbc")
@@ -925,10 +1007,13 @@ object GraftApp {
   private def deltaTableProps(sink: SinkConf): Map[String, String] =
     (if (sink.options.get("enable_change_data_feed").exists(_.toBoolean))
       Map("delta.enableChangeDataFeed" -> "true")
-    else Map.empty[String, String]) ++
-      sink.options.collect { case (k, v) if k.startsWith("property.") =>
-        k.stripPrefix("property.") -> v
-      }
+    else Map.empty[String, String]) ++ tableProperties(sink)
+
+  /** Every `options.property.<key>` of a sink, keyed by `<key>`. */
+  private def tableProperties(sink: SinkConf): Map[String, String] =
+    sink.options.collect { case (k, v) if k.startsWith("property.") =>
+      k.stripPrefix("property.") -> v
+    }
 
   /** Parse a config `timestamp_as_of` value to epoch millis — the
     * shapes delta-spark's `timestampAsOf` accepts: `yyyy-MM-dd`
@@ -980,116 +1065,11 @@ object GraftApp {
   /** Run a batch pipeline: returns the INTO outputs after sinking. */
   def runBatch(spark: SparkSession, config: GraftConfig): Map[String, DataFrame] = {
     require(!config.streaming, "use runStreaming for streaming configs")
-    registerUdfs(spark, config)
-    val runner = new GraftSqlRunner(spark, streaming = false)
-    config.sources.foreach { s =>
-      requireFormatAvailable(spark, s.format, "source")
-      runner.registerSource(s.name, loadSource(spark, s, streaming = false))
-    }
-    val outputs = runner.run(config.sql)
-    config.sinks.foreach { sink =>
-      val df = outputs.getOrElse(sink.table,
-        throw new IllegalArgumentException(
-          s"sink references unknown output table '${sink.table}'"))
-      requireSinkAvailable(spark, sink, streaming = false)
-      // upsert snapshots own their layout — reject a partition spec
-      // instead of silently dropping it
-      require(sink.partitionBy.isEmpty || sink.mode != "upsert",
-        s"partition_by is not supported on upsert sinks (sink '${sink.table}')")
-      // zorder_by: cluster the batch write on the Morton key of 2-3
-      // dimension columns so every file's min/max statistics prune
-      // scans on ANY of them (operators.Layout); orthogonal to
-      // partition_by (dirs split first, files cluster within)
-      require(sink.zorderBy.isEmpty || sink.mode == "append" ||
-        sink.mode == "overwrite",
-        s"zorder_by is only supported on append/overwrite sinks " +
-          s"(sink '${sink.table}')")
-      require(sink.zorderBy.isEmpty ||
-        (sink.zorderBy.size >= 2 && sink.zorderBy.size <= 3),
-        s"zorder_by takes 2 or 3 columns (sink '${sink.table}')")
-      val clustered =
-        if (sink.zorderBy.isEmpty) df
-        else {
-          val keyed = df.withColumn("__z", graft.operators.Layout.mortonKey(
-            sink.zorderBy.map(org.apache.spark.sql.functions.col)))
-          // zorder_files pins the file count (an explicit repartition
-          // AQE won't coalesce); without it the session's shuffle
-          // parallelism decides and AQE may merge small outputs
-          val ranged = sink.options.get("zorder_files") match {
-            case Some(n) => keyed.repartitionByRange(n.toInt,
-              org.apache.spark.sql.functions.col("__z"))
-            case None => keyed.repartitionByRange(
-              org.apache.spark.sql.functions.col("__z"))
-          }
-          ranged.sortWithinPartitions("__z").drop("__z")
-        }
-      def writer(d: org.apache.spark.sql.DataFrame) = {
-        val w = d.write.options(sink.options - "zorder_files")
-        if (sink.partitionBy.nonEmpty) w.partitionBy(sink.partitionBy: _*) else w
-      }
-      sink.mode match {
-        case "append" | "overwrite"
-            if sink.format == "delta" && !deltaSourceAvailable(spark) =>
-          // native delta COMMITS without the jar (DeltaLite.write,
-          // put-if-absent version claim + OCC retry). partition_by maps
-          // to the native hive-layout partitioned writer (q143);
-          // zorder_by still needs the connector's layout control.
-          // `options.enable_change_data_feed: true` stamps
-          // delta.enableChangeDataFeed at CREATION (writer version 4) —
-          // mutations then write exact cdc files and tails stream them.
-          // Any `options.property.<key>: <value>` stamps <key> as a raw
-          // table property at creation (delta.enableInCommitTimestamps,
-          // delta.constraints.*, delta.appendOnly, …) — the native
-          // writer then honors/enforces it like any foreign table's.
-          require(sink.zorderBy.isEmpty,
-            s"delta sink '${sink.table}': zorder_by needs the " +
-              "delta-spark connector's layout control")
-          graft.sources.DeltaLite.write(spark, df, sink.path, sink.mode,
-            partitionBy = sink.partitionBy,
-            configuration = deltaTableProps(sink))
-          ()
-        case "append" | "overwrite"
-            if sink.format == "iceberg" &&
-              !formatOnClasspath(spark, "iceberg") =>
-          // native Iceberg COMMITS without the jar (IcebergLite.write;
-          // format-version 2, put-if-absent metadata claim).
-          // partition_by maps to an IDENTITY partition spec (real spec
-          // fields + per-file partition values in the manifests);
-          // zorder_by still needs the runtime's layout control.
-          require(sink.zorderBy.isEmpty,
-            s"iceberg sink '${sink.table}': zorder_by needs the " +
-              "iceberg-spark runtime")
-          // `options.write_format: orc|avro` picks the data file format
-          // (stamped as write.format.default at creation);
-          // `options.property.<key>` stamps creation table properties —
-          // the iceberg twin of the delta sink's configuration map;
-          // `options.to_branch` stages onto a named branch (the WAP
-          // pattern — publish later with rollback_to_snapshot of the
-          // branch head).
-          graft.sources.IcebergLite.write(spark, df, sink.path, sink.mode,
-            partitionBy = sink.partitionBy,
-            format = sink.options.get("write_format"),
-            properties = sink.options.collect {
-              case (k, v) if k.startsWith("property.") =>
-                k.stripPrefix("property.") -> v
-            },
-            toBranch = sink.options.get("to_branch"))
-          ()
-        case "append" =>
-          writer(clustered).mode("append").format(sink.format).save(sink.path)
-        case "overwrite" =>
-          writer(clustered).mode("overwrite").format(sink.format).save(sink.path)
-        case "dummy" =>
-          // reference Dummy sink (sink.rs:127-129): consume, write nothing
-          println(s"[graft] dummy sink '${sink.table}': ${df.count()} rows")
-        case "jdbc" if sink.keys.isEmpty =>
-          df.write.mode("append")
-            .jdbc(sink.options("url"), sink.options("dbtable"), jdbcProps(sink))
-        case "jdbc" | "upsert" =>
-          graft.sinks.Sinks.upsertBatch(df, sink.keys, keyedTarget(sink))
-        case other => throw new IllegalArgumentException(s"unknown sink mode $other")
-      }
-    }
+    val analyzed = analyze(spark, config, streaming = false)
+    // every sink is planned before the first one writes
+    analyzed.sinks
+      .map { case (sink, df) => (df, sinkPlan(spark, sink, df, streaming = false)) }
+      .foreach { case (df, write) => write(df, None) }
     // table maintenance AFTER the sinks: groom what this run just wrote
     config.maintenance.foreach { m =>
       m.format match {
@@ -1153,7 +1133,7 @@ object GraftApp {
             retainMillis = m.vacuumRetainMillis)
       }
     }
-    outputs
+    analyzed.outputs
   }
 
   /** Run a streaming pipeline: one StreamingQuery per sink. */
@@ -1173,71 +1153,23 @@ object GraftApp {
     // every run's query clones the session: keep generated code on the
     // executors' shared class loader so runs after the first reuse it
     GraftSession.shareGeneratedCode(spark)
-    registerUdfs(spark, config)
-    val runner = new GraftSqlRunner(spark, streaming = true)
-    config.sources.foreach { s =>
-      requireFormatAvailable(spark, s.format, "source")
-      runner.registerSource(s.name, loadSource(spark, s, streaming = true))
+    val planned = analyze(spark, config, streaming = true).sinks.map { case (sink, df) =>
+      (sink, df, sinkPlan(spark, sink, df, streaming = true))
     }
-    val outputs = runner.run(config.sql)
-    config.sinks.map { sink =>
-      val df = outputs.getOrElse(sink.table,
-        throw new IllegalArgumentException(
-          s"sink references unknown output table '${sink.table}'"))
-      val ckpt = sink.checkpoint.getOrElse(sink.path + "_ckpt")
-      requireSinkAvailable(spark, sink, streaming = true)
-      // keyed sinks own their layout (key-hash buckets, table files) —
-      // a user partition spec would be silently unhonored, so reject it
-      require(sink.partitionBy.isEmpty || sink.mode == "append",
-        s"partition_by is only supported on append sinks (sink '${sink.table}')")
-      // streaming queries carry the sink table as their name so
-      // listener progress / the /metrics endpoint label per sink
-      val qn = Some(sink.table)
-      sink.mode match {
-        case "append"
-            if sink.format == "delta" && !deltaSourceAvailable(spark) =>
-          require(sink.partitionBy.isEmpty,
-            s"delta sink '${sink.table}': partition_by needs the " +
-              "delta-spark connector (native commits are unpartitioned)")
-          graft.sinks.Sinks.appendDelta(df, sink.path, ckpt,
-            appId = s"graft-${sink.table}", queryName = qn,
-            configuration = deltaTableProps(sink))
-        case "append"
-            if sink.format == "iceberg" &&
-              !formatOnClasspath(spark, "iceberg") =>
-          require(sink.partitionBy.isEmpty,
-            s"iceberg sink '${sink.table}': partition_by needs the " +
-              "iceberg-spark runtime (native commits are unpartitioned)")
-          graft.sinks.Sinks.appendIceberg(df, sink.path, ckpt,
-            appId = s"graft-${sink.table}", queryName = qn)
-        case "append" => graft.sinks.Sinks.appendParquet(
-          df, sink.path, ckpt, sink.partitionBy, sink.format, sink.options,
-          queryName = qn)
-        case "upsert" | "jdbc" =>
-          // keyed sinks: one collapse → merge body per micro-batch; the
-          // txn app id lets delta/iceberg skip a retried batch
-          val kckpt =
-            if (sink.mode == "upsert") ckpt
-            else sink.checkpoint.getOrElse(throw new IllegalArgumentException(
-              s"streaming jdbc sink '${sink.table}' needs a checkpoint for exactly-once resume"))
-          graft.sinks.Sinks.upsert(df, sink.keys, keyedTarget(sink), kckpt,
-            appId = Some(s"graft-${sink.table}"), queryName = qn)
-        case "dummy" =>
-          // consume + count per microbatch; a throwaway checkpoint is
-          // fine — the dummy sink has no state worth resuming
-          val dckpt = sink.checkpoint.getOrElse(
-            java.nio.file.Files.createTempDirectory("graft_dummy_ckpt").toString)
-          df.writeStream
-            .queryName(sink.table)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
-            .option("checkpointLocation", dckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, id: Long) =>
-              println(s"[graft] dummy sink '${sink.table}' batch $id: ${b.count()} rows")
-            }
-            .start()
-        case other    => throw new IllegalArgumentException(s"unknown streaming sink mode $other")
-      }
+    planned.map { case (sink, df, write) =>
+      // a dummy sink keeps no state worth resuming: a throwaway checkpoint
+      val checkpoint = sink.checkpoint.getOrElse(
+        if (sink.mode == "dummy")
+          java.nio.file.Files.createTempDirectory("graft_dummy_ckpt").toString
+        else sink.path + "_ckpt")
+      // an append sink lands each row once: Append mode holds back an
+      // aggregate row until the watermark finalizes it
+      val outputMode =
+        if (sink.mode == "append") OutputMode.Append else OutputMode.Update
+      // the query carries the sink table as its name so listener
+      // progress and the /metrics endpoint label per sink
+      Sinks.stream(df, write, outputMode, checkpoint,
+        appId = s"graft-${sink.table}", queryName = Some(sink.table))
     }
   }
 }

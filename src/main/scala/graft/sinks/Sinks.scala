@@ -26,77 +26,54 @@ object Sinks {
   import graft.cdc.ChangeModel
   import graft.sources.DeltaLite.KeyStats
 
-  /** Label the streaming query (surfaces in StreamingQueryListener
-    * progress and the /metrics endpoint as `query="<name>"`).
+  /** Lands one batch of a sink's output. `txn` is (stable sink app id,
+    * batch id) for a streaming micro-batch, so the formats whose log
+    * records it skip a retried batch; None for a batch run's one write.
     */
-  private def named[T](w: org.apache.spark.sql.streaming.DataStreamWriter[T],
-      name: Option[String]): org.apache.spark.sql.streaming.DataStreamWriter[T] =
-    name.fold(w)(w.queryName)
+  type Write = (DataFrame, Option[(String, Long)]) => Unit
 
-  /** Append sink: immutable-log files + checkpoint (exactly-once).
-    * `format` is any streaming-capable DataSource name — "parquet"
-    * default, "delta" once the connector jars are on the classpath
-    * (GraftApp probes availability at build time).
+  /** A DataSource `format` append or overwrite through Spark's writer.
+    * In a streaming run it is Spark's file sink instead of a foreachBatch
+    * body (see [[stream]]): the sink's `_spark_metadata` log is its
+    * exactly-once record.
     */
-  def appendParquet(df: DataFrame, path: String, checkpoint: String,
-      partitionBy: Seq[String] = Nil, format: String = "parquet",
-      options: Map[String, String] = Map.empty,
-      queryName: Option[String] = None): StreamingQuery = {
-    val w = named(df.writeStream, queryName)
-      .format(format)
-      .options(options)
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).start()
+  final case class FileWrite(format: String, path: String, mode: String,
+      partitionBy: Seq[String], options: Map[String, String]) extends Write {
+    def apply(df: DataFrame, txn: Option[(String, Long)]): Unit = {
+      val w = df.write.format(format).options(options).mode(mode)
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .save(path)
+    }
   }
 
-  /** Streaming append into a NATIVE Delta table (no delta-spark jar):
-    * each micro-batch commits through [[graft.sources.DeltaLite.write]]
-    * with Delta's idempotent-writer `txn` action — the appId is stable
-    * per sink and the transaction version is the batch id, so a
-    * RETRIED batch (foreachBatch redelivery after a crash) is detected
-    * against the table's recorded high-water mark and skipped instead
-    * of double-appending. Exactly-once append, enforced by the table
-    * log itself (the same protocol delta-spark's streaming sink uses).
+  /** Start a sink's streaming query; every sink's query starts here. It
+    * is named `queryName` (listener progress and the /metrics endpoint
+    * label it `query="<name>"`), checkpointed at `checkpoint`, and
+    * drained with Trigger.AvailableNow. Each micro-batch runs `write`
+    * with `txn = (appId, batchId)` under `outputMode`; `appId` must stay
+    * stable for the sink across restarts. A [[FileWrite]] append hands
+    * the stream to Spark's file sink instead.
     */
-  def appendDelta(df: DataFrame, tablePath: String, checkpoint: String,
-      appId: String, queryName: Option[String] = None,
-      /** table properties stamped when the FIRST batch creates the
-        * table (delta.enableChangeDataFeed,
-        * delta.enableInCommitTimestamps, delta.constraints.*, …). */
-      configuration: Map[String, String] = Map.empty): StreamingQuery =
-    named(df.writeStream, queryName)
-      .outputMode(OutputMode.Append)
+  def stream(df: DataFrame, write: Write, outputMode: OutputMode,
+      checkpoint: String, appId: String,
+      queryName: Option[String]): StreamingQuery = {
+    val w = write match {
+      case f: FileWrite =>
+        val files = df.writeStream.format(f.format).options(f.options)
+          .option("path", f.path).outputMode(outputMode)
+        if (f.partitionBy.nonEmpty) files.partitionBy(f.partitionBy: _*)
+        else files
+      case _ =>
+        df.writeStream.outputMode(outputMode)
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            write(batch, Some((appId, batchId)))
+          }
+    }
+    queryName.fold(w)(w.queryName)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.DeltaLite.write(batch.sparkSession, batch,
-          tablePath, "append", txn = Some((appId, batchId)),
-          configuration = configuration)
-        ()
-      }
       .start()
-
-  /** Streaming append into a NATIVE Iceberg table — [[appendDelta]]'s
-    * twin: each micro-batch commits one snapshot whose summary carries
-    * the `graft-txn-app`/`graft-txn-version` watermark, so a RETRIED
-    * batch is detected against the table's own metadata and skipped.
-    * Exactly-once append enforced by the table, not the checkpoint.
-    */
-  def appendIceberg(df: DataFrame, tablePath: String, checkpoint: String,
-      appId: String, queryName: Option[String] = None): StreamingQuery =
-    named(df.writeStream, queryName)
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.IcebergLite.write(batch.sparkSession, batch,
-          tablePath, "append", txn = Some((appId, batchId)))
-        ()
-      }
-      .start()
+  }
 
   /** Where a keyed sink lands. [[merge]] receives one collapsed,
     * non-empty batch: `images` (payload columns, one row per key) to
@@ -380,15 +357,7 @@ object Sinks {
     */
   def upsert(changes: DataFrame, keyCols: Seq[String], target: Target,
       checkpoint: String, appId: Option[String] = None,
-      queryName: Option[String] = None): StreamingQuery = {
-    val app = appId.getOrElse(checkpoint)
-    named(changes.writeStream, queryName)
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertBatch(batch, keyCols, target, Some((app, batchId)))
-      }
-      .start()
-  }
+      queryName: Option[String] = None): StreamingQuery =
+    stream(changes, (batch, txn) => upsertBatch(batch, keyCols, target, txn),
+      OutputMode.Update, checkpoint, appId.getOrElse(checkpoint), queryName)
 }

@@ -182,6 +182,27 @@ object PushBuffer {
     }
   }
 
+  /** Renumber a channel whose end is behind `from` — a consumer's
+    * committed start — so its retained events begin at `from`, in their
+    * order. That happens after a restart that kept the consumer's
+    * checkpoint: the new channel counts from 0 again, and a batch planned
+    * from the committed start to the smaller end would read nothing, then
+    * its commit would evict the acknowledged events.
+    */
+  def resumeAt(channel: String, from: Long): Unit = {
+    val b = buf(channel)
+    b.synchronized {
+      if (b.end < from) {
+        val events = b.events.toArray(new Array[Event](b.events.size))
+        b.events.clear()
+        events.iterator.zipWithIndex.foreach { case (e, i) =>
+          b.events.add(e.copy(seq = from + i))
+        }
+        b.base = from
+      }
+    }
+  }
+
   def clear(channel: String): Unit = {
     val b = buf(channel)
     b.synchronized { b.events.clear(); b.base = 0L; b.notifyAll() }
@@ -246,6 +267,7 @@ private[sources] class PushScan(channel: String) extends Scan {
           "latestOffset(Offset, ReadLimit) should be called instead")
       override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
         val from = start.asInstanceOf[PushOffset].seq
+        PushBuffer.resumeAt(channel, from)
         val end = PushBuffer.endOffset(channel)
         limit match {
           case _: ReadAllAvailable =>

@@ -37,10 +37,11 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer, HttpsConfi
   */
 object WebhookServer {
 
-  final class Handle private[WebhookServer] (server: HttpServer) {
+  final class Handle private[WebhookServer] (server: HttpServer,
+      pool: java.util.concurrent.ExecutorService) {
     /** Bound port — pass port=0 to start and let the OS choose. */
     def port: Int = server.getAddress.getPort
-    def stop(): Unit = server.stop(0)
+    def stop(): Unit = { server.stop(0); pool.shutdown() }
   }
 
   /** Start serving `endpoints` (URL path -> push channel). A small
@@ -68,14 +69,14 @@ object WebhookServer {
         s.setHttpsConfigurator(new HttpsConfigurator(ctx))
         s
     }
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(
-      threads,
-      r => { val t = new Thread(r, "graft-webhook"); t.setDaemon(true); t }))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads,
+      r => { val t = new Thread(r, "graft-webhook"); t.setDaemon(true); t })
+    server.setExecutor(pool)
     endpoints.foreach { case (path, channel) =>
       server.createContext(path, handler(channel))
     }
     server.start()
-    new Handle(server)
+    new Handle(server, pool)
   }
 
   private val Verbs = Set("POST", "PUT", "DELETE")

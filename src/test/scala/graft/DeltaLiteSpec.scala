@@ -265,7 +265,11 @@ class DeltaLiteSpec extends AnyFunSuite {
     def run(): Unit = {
       val stream = spark.readStream
         .schema(Seq((1L, "a")).toDF("k", "v").schema).parquet(src)
-      val q = graft.sinks.Sinks.appendDelta(stream, tbl, ckpt, "app1")
+      val q = graft.sinks.Sinks.stream(stream, (batch, txn) => {
+          DeltaLite.write(batch.sparkSession, batch, tbl, "append", txn = txn)
+          ()
+        }, org.apache.spark.sql.streaming.OutputMode.Append, ckpt, "app1",
+        queryName = None)
       assert(q.awaitTermination(120000), "stream timed out")
     }
     run()

@@ -2691,49 +2691,95 @@ class GraftAppSpec extends AnyFunSuite {
   test("one native-commit rule: build and run agree for every sink " +
       "format × mode × execution mode") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_native_rule").toString
-    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$tmp/src")
-    // (format, mode) -> commits natively in (batch, streaming); no
-    // connector jar is on the test classpath, and streaming has no
-    // overwrite mode, so the only refused combination is streaming
-    // overwrite
-    val rule = Seq(
-      ("delta", "append") -> ((true, true)),
-      ("delta", "overwrite") -> ((true, false)),
-      ("delta", "upsert") -> ((true, true)),
-      ("iceberg", "append") -> ((true, true)),
-      ("iceberg", "overwrite") -> ((true, false)),
-      ("iceberg", "upsert") -> ((true, true)),
-      ("parquet", "append") -> ((false, false)),
-      ("parquet", "overwrite") -> ((false, false)),
-      ("parquet", "upsert") -> ((false, false)))
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("graft_native_rule").toString
+    Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("k", "n", "v")
+      .write.parquet(s"$tmp/src")
+    def config(sink: SinkConf, streaming: Boolean) = GraftConfig(
+      sources = Seq(SourceConf("pt", s"$tmp/src")),
+      sql = "SELECT k, n, v INTO o FROM pt", sinks = Seq(sink),
+      streaming = streaming)
+    /** Build and run one sink; both must succeed or both fail. */
+    def agree(label: String, sink: SinkConf, streaming: Boolean): Boolean = {
+      val c = config(sink, streaming)
+      val built = scala.util.Try(GraftApp.build(spark, c))
+      val ran = scala.util.Try(
+        if (streaming) runToEnd(c) else { runBatch(spark, c); () })
+      assert(built.isSuccess == ran.isSuccess, s"$label: build $built, run $ran")
+      built.isSuccess
+    }
+    def mode(streaming: Boolean) = if (streaming) "streaming" else "batch"
+    // no connector jar is on the test classpath: delta and iceberg commit
+    // natively in every mode, and streaming has no overwrite mode
     for {
-      ((format, mode), (nativeBatch, nativeStreaming)) <- rule
+      format <- Seq("delta", "iceberg", "parquet")
+      sinkMode <- Seq("append", "overwrite", "upsert")
       streaming <- Seq(false, true)
     } {
-      val label = s"$format $mode ${if (streaming) "streaming" else "batch"}"
-      assert(GraftApp.sinkCommitsNatively(format, mode, streaming) ==
-        (if (streaming) nativeStreaming else nativeBatch), label)
-      val config = GraftConfigLoader.fromYaml(
-        s"""sources:
-           |  - name: pt
-           |    path: $tmp/src
-           |sql: SELECT k, v INTO o FROM pt;
-           |sinks:
-           |  - table: o
-           |    path: $tmp/${label.replace(' ', '_')}
-           |    format: $format
-           |    mode: $mode
-           |    keys: [k]
-           |streaming: $streaming
-           |""".stripMargin)
-      val built = scala.util.Try(GraftApp.build(spark, config))
-      val ran = scala.util.Try(
-        if (streaming) runToEnd(config) else { runBatch(spark, config); () })
-      assert(built.isSuccess == ran.isSuccess, s"$label: build $built, run $ran")
-      assert(built.isSuccess == !(streaming && mode == "overwrite"),
-        s"$label: build $built")
+      val label = s"$format $sinkMode ${mode(streaming)}"
+      val path = s"$tmp/${label.replace(' ', '_')}"
+      val ok = agree(label, SinkConf("o", path, mode = sinkMode,
+        keys = Seq("k"), format = format), streaming)
+      assert(ok == !(streaming && sinkMode == "overwrite"), label)
+      val log = if (format == "delta") "_delta_log" else "metadata"
+      if (ok) assert(Files.exists(Paths.get(path, log)) == (format != "parquet"),
+        s"$label: native commit log")
     }
+    // every other sink rule: (label, sink, streaming, runs)
+    val derby = Map("url" -> "jdbc:derby:memory:graft_sink_rules;create=true",
+      "dbtable" -> "sink_rules")
+    val jdbc = SinkConf("o", "", mode = "jdbc", options = derby)
+    val ckpt = Some(s"$tmp/jdbc_ckpt")
+    def native(format: String, sinkMode: String, streaming: Boolean,
+        partitionBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil) =
+      SinkConf("o", s"$tmp/${format}_${sinkMode}_${mode(streaming)}_" +
+        s"${partitionBy.size}_${zorderBy.size}", mode = sinkMode,
+        format = format, partitionBy = partitionBy, zorderBy = zorderBy)
+    val cases = Seq(
+      // native appends honor partition_by in both execution modes
+      ("streaming delta append partition_by",
+        native("delta", "append", true, partitionBy = Seq("v")), true, true),
+      ("streaming iceberg append partition_by",
+        native("iceberg", "append", true, partitionBy = Seq("v")), true, true),
+      // z-order clustering needs the connector's layout control
+      ("batch delta append zorder_by",
+        native("delta", "append", false, zorderBy = Seq("k", "n")), false, false),
+      ("batch delta overwrite zorder_by",
+        native("delta", "overwrite", false, zorderBy = Seq("k", "n")), false, false),
+      ("batch iceberg append zorder_by",
+        native("iceberg", "append", false, zorderBy = Seq("k", "n")), false, false),
+      ("batch iceberg overwrite zorder_by",
+        native("iceberg", "overwrite", false, zorderBy = Seq("k", "n")), false, false),
+      ("batch parquet append zorder_by",
+        native("parquet", "append", false, zorderBy = Seq("k", "n")), false, true),
+      // a streaming jdbc sink merges by key from its own checkpoint
+      ("streaming jdbc", jdbc.copy(keys = Seq("k"), checkpoint = ckpt), true, true),
+      ("streaming jdbc without keys", jdbc.copy(checkpoint = ckpt), true, false),
+      ("streaming jdbc without checkpoint", jdbc.copy(keys = Seq("k")), true, false),
+      ("batch jdbc", jdbc, false, true),
+      ("batch jdbc without dbtable", jdbc.copy(options = derby - "dbtable"),
+        false, false),
+      ("streaming jdbc without dbtable", jdbc.copy(keys = Seq("k"),
+        checkpoint = ckpt, options = derby - "dbtable"), true, false),
+      // jdbc and dummy sinks write no files to partition
+      ("batch jdbc partition_by", jdbc.copy(partitionBy = Seq("v")), false, false),
+      ("streaming jdbc partition_by", jdbc.copy(keys = Seq("k"),
+        checkpoint = ckpt, partitionBy = Seq("v")), true, false),
+      ("batch dummy", SinkConf("o", "", mode = "dummy"), false, true),
+      ("streaming dummy", SinkConf("o", "", mode = "dummy"), true, true),
+      ("batch dummy partition_by",
+        SinkConf("o", "", mode = "dummy", partitionBy = Seq("v")), false, false),
+      ("streaming dummy partition_by",
+        SinkConf("o", "", mode = "dummy", partitionBy = Seq("v")), true, false))
+    cases.foreach { case (label, sink, streaming, runs) =>
+      assert(agree(label, sink, streaming) == runs, label)
+    }
+    val partitioned = native("delta", "append", true, partitionBy = Seq("v")).path
+    assert(graft.sources.DeltaLite.snapshot(spark, partitioned)
+      .partitionColumns == Seq("v"))
+    assert(graft.sources.DeltaLite.read(spark, partitioned).count() == 2)
+    assert(graft.sources.IcebergLite.read(spark,
+      native("iceberg", "append", true, partitionBy = Seq("v")).path).count() == 2)
   }
 
 }

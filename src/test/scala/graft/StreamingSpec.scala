@@ -1243,6 +1243,52 @@ class StreamingSpec extends AnyFunSuite {
     assert(ks == (0L to 8L))
   }
 
+  test("a push channel restarted behind the query's committed offset " +
+      "resumes at it: changes pushed after the restart reach the sink") {
+    import graft.sources.PushBuffer
+    val chan = "push_restart_resume"
+    PushBuffer.clear(chan)
+    PushBuffer.configure(chan, capacity = 10)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_resume").toString
+    PushBuffer.pushAll(chan, (0 until 8).map(i => s"""{"k":$i}"""), waitMs = 0L)
+    assert(availableNowRun(chan, tmp) == Seq((0L, 8L)))
+    PushBuffer.pushAll(chan, Seq("""{"k":8}"""), waitMs = 0L)
+    assert(availableNowRun(chan, tmp) == Seq((8L, 9L)))
+    // a new driver finds the channel empty and counting from 0, while
+    // the checkpoint it kept has committed offset 9
+    PushBuffer.clear(chan)
+    PushBuffer.pushAll(chan, (9 until 12).map(i => s"""{"k":$i}"""), waitMs = 0L)
+    assert(availableNowRun(chan, tmp) == Seq((9L, 12L)))
+    val out = spark.read.parquet(s"$tmp/out")
+      .select(col("seq"), get_json_object(col("value"), "$.k").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    assert(out == (0L until 12L).map(i => (i, i)))
+  }
+
+  test("a stopped webhook server leaves none of its request threads " +
+      "alive") {
+    import graft.sources.{PushBuffer, WebhookServer}
+    val chan = "webhook_stop"
+    PushBuffer.clear(chan)
+    import scala.jdk.CollectionConverters._
+    def webhookThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName == "graft-webhook").toSet
+    val before = webhookThreads
+    val srv = WebhookServer.start(0, Map("/ingest" -> chan))
+    val resp = java.net.http.HttpClient.newHttpClient().send(
+      java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(s"http://127.0.0.1:${srv.port}/ingest"))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString("""{"k":1}"""))
+        .build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString())
+    assert(resp.statusCode() == 200)
+    val pool = webhookThreads -- before
+    assert(pool.nonEmpty, "the request ran on no pool thread")
+    srv.stop()
+    pool.foreach(_.join(10000L))
+    assert(pool.forall(!_.isAlive), s"still alive: ${pool.filter(_.isAlive)}")
+  }
+
   test("webhook edge returns 429 + Retry-After when the channel is full") {
     import graft.sources.{PushBuffer, WebhookServer}
     val chan = "webhook_429"
