@@ -882,6 +882,14 @@ object GraftApp {
       require(sink.zorderBy.size >= 2 && sink.zorderBy.size <= 3,
         s"zorder_by takes 2 or 3 columns (sink '${sink.table}')")
       requireColumns("zorder_by", sink.zorderBy)
+      // Layout.mortonKey casts every dimension to long
+      import org.apache.spark.sql.types.{NumericType, TimestampType}
+      sink.zorderBy.map(output.schema(_)).foreach { f =>
+        require(f.dataType.isInstanceOf[NumericType] ||
+            f.dataType == TimestampType,
+          s"zorder_by column ${f.name} is ${f.dataType.simpleString}; " +
+            s"z-order interleaves numeric or timestamp columns (sink '${sink.table}')")
+      }
     }
     sink.mode match {
       case "dummy" =>

@@ -91,7 +91,8 @@ object Sinks {
   }
 
   /** Native Delta copy-on-write MERGE ([[graft.sources.DeltaLite.upsert]]):
-    * only files holding touched keys are rewritten, in one atomic commit.
+    * only files that may hold touched keys are rewritten, in one atomic
+    * commit (a merge that fits one file rewrites every stats candidate).
     * `configuration` is stamped when the first merge creates the table
     * (delta.enableChangeDataFeed, delta.constraints.*, …).
     */
@@ -150,8 +151,12 @@ object Sinks {
       val bucketOf = pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets))
         .cast("int")
       val keys = images.select(keyCols.map(col): _*).unionByName(deleteKeys)
-      val touched = keys.select(bucketOf).distinct()
-        .collect().map(_.getInt(0)).sorted // ≤ numBuckets values
+      // one bucket: a merge always carries keys, so bucket 0 is touched
+      // and no job needs to say so
+      val touched =
+        if (numBuckets == 1) Array(0)
+        else keys.select(bucketOf).distinct()
+          .collect().map(_.getInt(0)).sorted // ≤ numBuckets values
       // resolve the filesystem FROM the state path (s3a://, hdfs://,
       // file:// all differ from fs.defaultFS in general)
       val fs = new Path(path).getFileSystem(

@@ -1492,18 +1492,15 @@ object DeltaLite {
     * batch splits to advisory-sized files. Scale-adaptive by
     * construction: the knob is bytes, not a core count. Skipped when
     * the CALLER's plan root is an explicit repartition (layout rigs
-    * like the clustered-compact fixture own their file layout) or when
-    * `graft.delta.optimizedWrite=false`. Identity/rowid fill
+    * like the clustered-compact fixture own their file layout, and a
+    * small [[upsert]]'s `coalesce(1)` rewrite is one file already) or
+    * when `graft.delta.optimizedWrite=false`. Identity/rowid fill
     * expressions are computed BELOW the added exchange (projections
     * with nondeterministic producers are never pushed through it), so
     * allocation still reads the persisted batch's partition layout.
     */
   private def rebalanceForStaging(spark: SparkSession,
       df: DataFrame): DataFrame = {
-    val on = spark.conf.getOption("graft.delta.optimizedWrite")
-        .forall(_.toBoolean) &&
-      spark.conf.getOption("spark.sql.adaptive.enabled")
-        .forall(_.toBoolean)
     // "explicit layout" = a repartition/coalesce at the plan root,
     // looking through projections and sorts (compact's clustered
     // shape is sortWithinPartitions OVER repartitionByRange — the
@@ -1521,9 +1518,22 @@ object DeltaLite {
           .RepartitionOperation => true
       case _ => false
     }
-    if (on && !explicitLayout(df.queryExecution.logical)) df.hint("rebalance")
+    if (optimizedWrite(spark) && !explicitLayout(df.queryExecution.logical))
+      df.hint("rebalance")
     else df
   }
+
+  /** Whether staging sizes its output files: `graft.delta.optimizedWrite`
+    * and AQE both on (the default). */
+  private def optimizedWrite(spark: SparkSession): Boolean =
+    spark.conf.getOption("graft.delta.optimizedWrite").forall(_.toBoolean) &&
+      spark.conf.getOption("spark.sql.adaptive.enabled").forall(_.toBoolean)
+
+  /** A live file's `numRecords`, when its add carries stats. */
+  private def statsNumRecords(snap: Snapshot, p: String): Option[Long] =
+    snap.stats.get(p).flatMap(js =>
+      try Option(mapper.readTree(js).get("numRecords")).map(_.asLong)
+      catch { case _: Exception => None })
 
   private def stageWithStats(spark: SparkSession, df: DataFrame,
       root: Path, fs: FileSystem,
@@ -2640,11 +2650,8 @@ object DeltaLite {
             s"scan path $scanPath not in the snapshot file set"))
         (action, card, bytes)
     }
-    def numRecords(p: String): Option[Long] = snap.stats.get(p)
-      .flatMap(js => try Option(mapper.readTree(js).get("numRecords"))
-        .map(_.asLong) catch { case _: Exception => None })
     val (fullyDead, dvd) = perFile.partition { case (p, card, _) =>
-      numRecords(p).contains(card)
+      statsNumRecords(snap, p).contains(card)
     }
     val now = 1L
     val lines = mutable.ArrayBuffer.empty[String]
@@ -4306,6 +4313,14 @@ object DeltaLite {
     *     writes) makes this O(churned range), not O(table).
     *  2. RESOLVE the actually-touched set with one semi-join of the
     *     candidate rows against the batch keys (reads candidates only).
+    *     A SMALL merge skips this probe: when the candidates' stats
+    *     `numRecords` plus the batch rows, times the schema's default
+    *     row width, fit `spark.sql.adaptive.advisoryPartitionSizeInBytes`,
+    *     every candidate counts as touched and an unpartitioned table
+    *     rewrites into one file (`coalesce(1)`, no rebalance shuffle) —
+    *     a candidate holding none of the keys is re-added unchanged in
+    *     the same commit. A candidate without `numRecords` is never
+    *     small.
     * Untouched files are never read twice nor rewritten; rewrite volume
     * is (touched rows − replaced rows) + batch. Live deletion vectors
     * are honored: scans read through the row_index anti-filter, a
@@ -4476,10 +4491,21 @@ object DeltaLite {
       if (threshold >= 0 && n * keyBytes <= threshold) broadcast(allKeysDf)
       else allKeysDf
 
+    // SMALL MERGE (see the scaladoc): the probe below would only narrow
+    // a set that a one-file rewrite reads anyway, so every candidate
+    // counts as touched
+    val rowBytes = snap.schema.fields.map(_.dataType.defaultSize.toLong).sum
+    val candidateRows = candidates.keys.toSeq.map(statsNumRecords(snap, _))
+    val small = candidateRows.forall(_.isDefined) &&
+      (candidateRows.flatten.sum + n) * rowBytes <=
+        spark.sessionState.conf.getConf(
+          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+
     // each task reports the set of files its rows came from (no
     // shuffle for a distinct), unioned once collected
     val touched: Set[String] =
-      if (candidates.isEmpty) Set.empty
+      if (small) candidates.keySet
+      else if (candidates.isEmpty) Set.empty
       else groupScan(candidates)
         .join(joinKeys, keyCols, "left_semi")
         .select("__file").as(org.apache.spark.sql.Encoders.STRING)
@@ -4586,7 +4612,12 @@ object DeltaLite {
       if (mapped) partFieldsU.map(physicalName) else snap.partitionColumns
     val moved: Seq[(String, Long, String, Map[String, Option[String]])] =
       if (snap.partitionColumns.isEmpty)
-        stageWithStats(spark, outStaged, root, fs, statsExcl)
+        // a small rewrite is one file by construction: coalesce, and
+        // staging adds no rebalance shuffle above the explicit layout
+        stageWithStats(spark,
+          if (small && optimizedWrite(spark)) outStaged.coalesce(1)
+          else outStaged,
+          root, fs, statsExcl)
           .map { case (n, sz, st) =>
             (n, sz, st, Map.empty[String, Option[String]])
           }

@@ -528,19 +528,95 @@ class DeltaLiteSpec extends AnyFunSuite {
     (1L to 200L).map(k => k -> s"v$k").toMap - 2L +
       (1L -> "AA") + (3L -> "C") + (500L -> "new")
 
-  test("one keyed-sink micro-batch into an existing Delta table runs at " +
-      "most 7 Spark jobs in 3 SQL executions") {
-    val t = seededTable("delta_jobs")
+  /** `body` with `spark.sql.adaptive.advisoryPartitionSizeInBytes` at one
+    * byte: no upsert is small, so each one probes for its touched files. */
+  private def largeMerges[T](body: => T): T = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("one small keyed-sink micro-batch into an existing one-file Delta " +
+      "table runs at most 4 Spark jobs in 2 SQL executions") {
+    val t = seededTable("delta_jobs_small")
     val counted = org.apache.spark.graft.JobCount(spark) {
       graft.sinks.Sinks.upsertBatch(changeBatch, Seq("k"),
         graft.sinks.Sinks.Delta(t), Some(("jobs", 1L)))
     }
+    // collapse + checkpoint (stats observed on its job), then the
+    // rewrite (key broadcast, write): no touched-file probe, no
+    // rebalance shuffle
+    info(s"${counted.jobs} jobs in ${counted.sqlExecutions} SQL executions")
+    assert(counted.jobs <= 4 && counted.sqlExecutions <= 2,
+      s"${counted.jobs} jobs in ${counted.sqlExecutions} SQL executions")
+    assert(keyedRows(t) == afterChangeBatch)
+  }
+
+  test("one keyed-sink micro-batch into an existing Delta table runs at " +
+      "most 7 Spark jobs in 3 SQL executions") {
+    val t = seededTable("delta_jobs")
+    // a merge too large for one file keeps the touched-file probe
+    val counted = largeMerges(org.apache.spark.graft.JobCount(spark) {
+      graft.sinks.Sinks.upsertBatch(changeBatch, Seq("k"),
+        graft.sinks.Sinks.Delta(t), Some(("jobs", 1L)))
+    })
     // collapse + checkpoint (stats observed on its job), the touched-file
     // probe, the rewrite
     info(s"${counted.jobs} jobs in ${counted.sqlExecutions} SQL executions")
     assert(counted.jobs <= 7 && counted.sqlExecutions <= 3,
       s"${counted.jobs} jobs in ${counted.sqlExecutions} SQL executions")
     assert(keyedRows(t) == afterChangeBatch)
+  }
+
+  test("a small upsert rewrites a candidate that holds none of its keys: " +
+      "rows intact and once, remove + add in one version, CDF inserts " +
+      "only, row ids kept, the DV absorbed") {
+    val t = java.nio.file.Files.createTempDirectory("delta_smallmiss")
+      .toString + "/tbl"
+    // one file of odd keys 1..19: stats range [1, 19]
+    DeltaLite.write(spark,
+      (1L to 19L by 2L).map(k => (k, s"v$k")).toDF("k", "v").coalesce(1), t,
+      configuration = Map("delta.enableChangeDataFeed" -> "true",
+        "delta.enableRowTracking" -> "true"))
+    // the first MERGE mints the materialized row-id columns in a
+    // metaData action, which the change feed declines to read across
+    DeltaLite.upsert(spark, Seq((1L, "v1")).toDF("k", "v"), t, Seq("k"))
+    DeltaLite.deleteWhere(spark, t, col("k") === 5L)
+    val before = DeltaLite.snapshot(spark, t)
+    assert(before.files.size == 1 && before.dvs.size == 1)
+    val oldFile = before.files.keys.head
+    def ids(): Map[Long, Long] = DeltaLite.readWithRowIds(spark, t)
+      .select(col("k"), col("_row_id")).as[(Long, Long)].collect().toMap
+    val idsBefore = ids()
+    // even keys inside the file's stats range, none of them in the file
+    val v = DeltaLite.upsert(spark,
+      Seq((2L, "new2"), (4L, "new4")).toDF("k", "v"), t, Seq("k"))
+    assert(v == before.version + 1)
+    val after = DeltaLite.snapshot(spark, t)
+    assert(!after.files.contains(oldFile),
+      "the unprobed candidate must be removed")
+    assert(after.files.size == 1 && after.dvs.isEmpty, after.dvs)
+    val commit = scala.io.Source.fromFile(
+      new java.io.File(t, f"_delta_log/$v%020d.json"))
+    val actions = try commit.getLines().toList finally commit.close()
+    assert(actions.count(_.startsWith("{\"remove\"")) == 1 &&
+      actions.exists(a => a.startsWith("{\"remove\"") && a.contains(oldFile)),
+      actions.mkString("\n"))
+    assert(actions.count(_.startsWith("{\"add\"")) == 1,
+      actions.mkString("\n"))
+    // every retained row once and unchanged; the DV'd key stays deleted
+    val rows = DeltaLite.read(spark, t).as[(Long, String)].collect()
+    val want = (1L to 19L by 2L).filter(_ != 5L).map(k => k -> s"v$k").toMap +
+      (2L -> "new2") + (4L -> "new4")
+    assert(rows.length == want.size && rows.toMap == want, rows.toSeq)
+    val feed = DeltaLite.changeFeed(spark, t, before.version, v)
+      .select("k", "_change_type").as[(Long, String)].collect().toSet
+    assert(feed == Set((2L, "insert"), (4L, "insert")), feed)
+    val idsAfter = ids()
+    assert(idsBefore.forall { case (k, id) => idsAfter.get(k).contains(id) },
+      s"retained rows must keep their row ids: $idsBefore vs $idsAfter")
+    assert(idsAfter.values.toSet.size == idsAfter.size, idsAfter)
   }
 
   test("keyed-sink contract through the collapse-observed stats: a null " +
@@ -1175,9 +1251,11 @@ class DeltaLiteSpec extends AnyFunSuite {
     DeltaLite.deleteWhere(spark, t, col("k") === 2L || col("k") === 12L)
     val withDvs = DeltaLite.snapshot(spark, t)
     assert(withDvs.dvs.size == 2)
-    // MERGE touching only the FIRST file's range (replace k=1, add k=21)
-    DeltaLite.upsert(spark, Seq((1L, "A1"), (21L, "new")).toDF("k", "v"),
-      t, Seq("k"))
+    // MERGE touching only the FIRST file's keys (replace k=1, add k=21);
+    // the range [1, 21] keeps both files candidates, so only the probe
+    // (a merge too large for one file) leaves the second one alone
+    largeMerges(DeltaLite.upsert(spark,
+      Seq((1L, "A1"), (21L, "new")).toDF("k", "v"), t, Seq("k")))
     val got = DeltaLite.read(spark, t).as[(Long, String)].collect().toMap
     // replaced + inserted, DV-deleted keys in BOTH files stay deleted
     assert(got(1L) == "A1" && got(21L) == "new")

@@ -2752,6 +2752,9 @@ class GraftAppSpec extends AnyFunSuite {
         native("iceberg", "overwrite", false, zorderBy = Seq("k", "n")), false, false),
       ("batch parquet append zorder_by",
         native("parquet", "append", false, zorderBy = Seq("k", "n")), false, true),
+      // z-order interleaves longs: a string dimension is refused up front
+      ("batch parquet overwrite zorder_by on a string column",
+        native("parquet", "overwrite", false, zorderBy = Seq("k", "v")), false, false),
       // a streaming jdbc sink merges by key from its own checkpoint
       ("streaming jdbc", jdbc.copy(keys = Seq("k"), checkpoint = ckpt), true, true),
       ("streaming jdbc without keys", jdbc.copy(checkpoint = ckpt), true, false),

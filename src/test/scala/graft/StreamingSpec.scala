@@ -628,6 +628,36 @@ class StreamingSpec extends AnyFunSuite {
     assert(bucketFiles(k1Bucket) != before(k1Bucket))
   }
 
+  test("a one-bucket parquet upsert runs no touched-bucket job") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_onebucket").toString
+    val want = (1L to 20L).map(k => k -> s"v$k").toMap - 4L +
+      (3L -> "C") + (30L -> "new")
+    /** Jobs of one merge (an update, a delete, an insert) into a seeded
+      * `numBuckets` snapshot, and the rows it leaves. */
+    def merge(numBuckets: Int): (Int, Map[Long, String]) = {
+      val target = graft.sinks.Sinks.BucketedParquet(s"$tmp/s$numBuckets",
+        numBuckets)
+      graft.sinks.Sinks.upsertBatch(
+        (1L to 20L).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"), target)
+      val counted = org.apache.spark.graft.JobCount(spark) {
+        graft.sinks.Sinks.upsertBatch(Seq(
+          (3L, "C", ChangeModel.UpdatePost, 1L),
+          (4L, "v4", ChangeModel.Delete, 2L),
+          (30L, "new", ChangeModel.Insert, 3L)).toDF("k", "v", "_op", "_seq"),
+          Seq("k"), target)
+      }
+      (counted.jobs, spark.read.parquet(target.path).select("k", "v")
+        .as[(Long, String)].collect().toMap)
+    }
+    val (oneJobs, oneRows) = merge(1)
+    val (twoJobs, twoRows) = merge(2)
+    info(s"1 bucket: $oneJobs jobs, 2 buckets: $twoJobs jobs")
+    // the two layouts differ only in the touched-bucket distinct
+    assert(oneJobs < twoJobs, s"1 bucket: $oneJobs jobs, 2 buckets: $twoJobs")
+    assert(oneRows == want && twoRows == want, s"$oneRows vs $twoRows")
+  }
+
   test("bucketed upsert: deletes shrink state; crash mid-swap recovers from backup") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

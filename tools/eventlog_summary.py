@@ -17,10 +17,14 @@ which the newest is taken. Prints, for each streaming micro-batch
     and other driver work show up.
 
 Jobs outside any micro-batch (batch queries, sink reads) are summarised on
-one line at the end.
+one line. The last line summarises the steady micro-batches, every batch
+but the first of its query in the log (that one creates the sink's table or
+warms the query up): their count, and the median jobs, SQL executions and
+first-submit-to-last-end span per batch.
 """
 import json
 import os
+import statistics
 import sys
 from collections import defaultdict
 
@@ -112,10 +116,15 @@ def main():
         (batches[j["batch"]] if j["batch"] else loose).append((jid, j))
     print(f"{os.path.dirname(files[0]) if len(files) > 1 else files[0]}: "
           f"{len(jobs)} jobs, {len(batches)} micro-batches")
+    steady = []  # (jobs, SQL executions, span ms) per steady batch
+    seen_queries = set()
     for (query, batch), js in sorted(batches.items()):
         js.sort(key=lambda x: x[1]["submit"] or 0)
         ex_ids = sorted({j["exec"] for _, j in js if j["exec"] is not None}, key=int)
         t0, t1 = js[0][1]["submit"], max((j["end"] or 0) for _, j in js)
+        if query in seen_queries and t0 is not None and t1:
+            steady.append((len(js), len(ex_ids), t1 - t0))
+        seen_queries.add(query)
         print(f"\nquery {query[:8]} batch {batch}: {len(js)} jobs in "
               f"{len(ex_ids)} SQL executions, first submit to last end {ms(t0, t1)}")
         for x in ex_ids:
@@ -139,6 +148,12 @@ def main():
     if loose:
         wall = sum((j["end"] or 0) - (j["submit"] or 0) for _, j in loose)
         print(f"\noutside micro-batches: {len(loose)} jobs, {wall} ms summed job wall")
+    if steady:
+        jobs_m, execs_m, span_m = (statistics.median(c) for c in zip(*steady))
+        print(f"\nsteady micro-batches: {len(steady)}, median {jobs_m:g} jobs in "
+              f"{execs_m:g} SQL executions, first submit to last end {span_m:g} ms")
+    else:
+        print("\nsteady micro-batches: 0")
 
 
 if __name__ == "__main__":
