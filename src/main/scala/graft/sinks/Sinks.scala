@@ -92,7 +92,8 @@ object Sinks {
 
   /** Native Delta copy-on-write MERGE ([[graft.sources.DeltaLite.upsert]]):
     * only files that may hold touched keys are rewritten, in one atomic
-    * commit (a merge that fits one file rewrites every stats candidate).
+    * commit (a merge that fits one file rewrites its one stats candidate
+    * without probing it for the keys).
     * `configuration` is stamped when the first merge creates the table
     * (delta.enableChangeDataFeed, delta.constraints.*, …).
     */

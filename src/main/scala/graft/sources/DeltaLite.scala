@@ -1529,12 +1529,6 @@ object DeltaLite {
     spark.conf.getOption("graft.delta.optimizedWrite").forall(_.toBoolean) &&
       spark.conf.getOption("spark.sql.adaptive.enabled").forall(_.toBoolean)
 
-  /** A live file's `numRecords`, when its add carries stats. */
-  private def statsNumRecords(snap: Snapshot, p: String): Option[Long] =
-    snap.stats.get(p).flatMap(js =>
-      try Option(mapper.readTree(js).get("numRecords")).map(_.asLong)
-      catch { case _: Exception => None })
-
   private def stageWithStats(spark: SparkSession, df: DataFrame,
       root: Path, fs: FileSystem,
       statsExclude: Set[String] = Set.empty)
@@ -2650,8 +2644,11 @@ object DeltaLite {
             s"scan path $scanPath not in the snapshot file set"))
         (action, card, bytes)
     }
+    def numRecords(p: String): Option[Long] = snap.stats.get(p)
+      .flatMap(js => try Option(mapper.readTree(js).get("numRecords"))
+        .map(_.asLong) catch { case _: Exception => None })
     val (fullyDead, dvd) = perFile.partition { case (p, card, _) =>
-      statsNumRecords(snap, p).contains(card)
+      numRecords(p).contains(card)
     }
     val now = 1L
     val lines = mutable.ArrayBuffer.empty[String]
@@ -4313,14 +4310,15 @@ object DeltaLite {
     *     writes) makes this O(churned range), not O(table).
     *  2. RESOLVE the actually-touched set with one semi-join of the
     *     candidate rows against the batch keys (reads candidates only).
-    *     A SMALL merge skips this probe: when the candidates' stats
-    *     `numRecords` plus the batch rows, times the schema's default
-    *     row width, fit `spark.sql.adaptive.advisoryPartitionSizeInBytes`,
-    *     every candidate counts as touched and an unpartitioned table
-    *     rewrites into one file (`coalesce(1)`, no rebalance shuffle) —
-    *     a candidate holding none of the keys is re-added unchanged in
-    *     the same commit. A candidate without `numRecords` is never
-    *     small.
+    *     A SMALL merge skips this probe: when pruning leaves exactly
+    *     one file and its recorded `size` plus the batch rows times the
+    *     schema's default row width fit
+    *     `spark.sql.adaptive.advisoryPartitionSizeInBytes`, that file
+    *     counts as touched and an unpartitioned table rewrites into one
+    *     file (`coalesce(1)`, no rebalance shuffle) — if it holds none
+    *     of the keys, its rows are re-added unchanged in the same
+    *     commit. Several candidates always probe: most of them may be
+    *     untouched.
     * Untouched files are never read twice nor rewritten; rewrite volume
     * is (touched rows − replaced rows) + batch. Live deletion vectors
     * are honored: scans read through the row_index anti-filter, a
@@ -4491,15 +4489,13 @@ object DeltaLite {
       if (threshold >= 0 && n * keyBytes <= threshold) broadcast(allKeysDf)
       else allKeysDf
 
-    // SMALL MERGE (see the scaladoc): the probe below would only narrow
-    // a set that a one-file rewrite reads anyway, so every candidate
-    // counts as touched
+    // SMALL MERGE (see the scaladoc): the probe below would only confirm
+    // the one candidate that a one-file rewrite reads anyway
     val rowBytes = snap.schema.fields.map(_.dataType.defaultSize.toLong).sum
-    val candidateRows = candidates.keys.toSeq.map(statsNumRecords(snap, _))
-    val small = candidateRows.forall(_.isDefined) &&
-      (candidateRows.flatten.sum + n) * rowBytes <=
+    val small = candidates.size == 1 &&
+      snap.sizes.get(candidates.keys.head).exists(_ + n * rowBytes <=
         spark.sessionState.conf.getConf(
-          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
 
     // each task reports the set of files its rows came from (no
     // shuffle for a distinct), unioned once collected

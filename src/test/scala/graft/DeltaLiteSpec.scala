@@ -528,12 +528,12 @@ class DeltaLiteSpec extends AnyFunSuite {
     (1L to 200L).map(k => k -> s"v$k").toMap - 2L +
       (1L -> "AA") + (3L -> "C") + (500L -> "new")
 
-  /** `body` with `spark.sql.adaptive.advisoryPartitionSizeInBytes` at one
-    * byte: no upsert is small, so each one probes for its touched files. */
-  private def largeMerges[T](body: => T): T = {
+  /** `body` with `spark.sql.adaptive.advisoryPartitionSizeInBytes` at
+    * `bytes`, the size an upsert's one-file rewrite must fit to be small. */
+  private def withAdvisoryBytes[T](bytes: Long)(body: => T): T = {
     val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "1")
+    spark.conf.set(key, bytes.toString)
     try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
@@ -557,7 +557,7 @@ class DeltaLiteSpec extends AnyFunSuite {
       "most 7 Spark jobs in 3 SQL executions") {
     val t = seededTable("delta_jobs")
     // a merge too large for one file keeps the touched-file probe
-    val counted = largeMerges(org.apache.spark.graft.JobCount(spark) {
+    val counted = withAdvisoryBytes(1)(org.apache.spark.graft.JobCount(spark) {
       graft.sinks.Sinks.upsertBatch(changeBatch, Seq("k"),
         graft.sinks.Sinks.Delta(t), Some(("jobs", 1L)))
     })
@@ -567,6 +567,39 @@ class DeltaLiteSpec extends AnyFunSuite {
     assert(counted.jobs <= 7 && counted.sqlExecutions <= 3,
       s"${counted.jobs} jobs in ${counted.sqlExecutions} SQL executions")
     assert(keyedRows(t) == afterChangeBatch)
+  }
+
+  test("a one-file upsert whose recorded file size exceeds the advisory " +
+      "size probes for touched files, though rows × default row width fit") {
+    val rnd = new scala.util.Random(7)
+    /** A one-file table of keys 1..200 with `width`-char random values. */
+    def table(prefix: String, width: Int): String = {
+      val t = java.nio.file.Files.createTempDirectory(prefix).toString + "/tbl"
+      DeltaLite.write(spark, (1L to 200L)
+        .map(k => (k, rnd.alphanumeric.take(width).mkString))
+        .toDF("k", "v").coalesce(1), t)
+      t
+    }
+    val advisory = 64L * 1024
+    val wide = table("delta_wide", 2000)
+    val narrow = table("delta_narrow", 4)
+    // 202 rows at the default width (long 8 + string 20 bytes) would fit;
+    // the wide table's file alone does not
+    assert(202L * (8 + 20) < advisory)
+    assert(DeltaLite.snapshot(spark, wide).sizes.values.forall(_ > advisory))
+    def merge(t: String): Int = withAdvisoryBytes(advisory)(
+      org.apache.spark.graft.JobCount(spark) {
+        DeltaLite.upsert(spark, Seq((1L, "A"), (300L, "new")).toDF("k", "v"),
+          t, Seq("k"))
+      }).jobs
+    val (wideJobs, narrowJobs) = (merge(wide), merge(narrow))
+    info(s"wide: $wideJobs jobs, narrow: $narrowJobs jobs")
+    // the wide merge adds the touched-file probe (key broadcast, scan)
+    assert(wideJobs >= narrowJobs + 2, s"wide $wideJobs, narrow $narrowJobs")
+    Seq(wide, narrow).foreach { t =>
+      val rows = keyedRows(t)
+      assert(rows.size == 201 && rows(1L) == "A" && rows(300L) == "new")
+    }
   }
 
   test("a small upsert rewrites a candidate that holds none of its keys: " +
@@ -1251,11 +1284,9 @@ class DeltaLiteSpec extends AnyFunSuite {
     DeltaLite.deleteWhere(spark, t, col("k") === 2L || col("k") === 12L)
     val withDvs = DeltaLite.snapshot(spark, t)
     assert(withDvs.dvs.size == 2)
-    // MERGE touching only the FIRST file's keys (replace k=1, add k=21);
-    // the range [1, 21] keeps both files candidates, so only the probe
-    // (a merge too large for one file) leaves the second one alone
-    largeMerges(DeltaLite.upsert(spark,
-      Seq((1L, "A1"), (21L, "new")).toDF("k", "v"), t, Seq("k")))
+    // MERGE touching only the FIRST file's range (replace k=1, add k=21)
+    DeltaLite.upsert(spark, Seq((1L, "A1"), (21L, "new")).toDF("k", "v"),
+      t, Seq("k"))
     val got = DeltaLite.read(spark, t).as[(Long, String)].collect().toMap
     // replaced + inserted, DV-deleted keys in BOTH files stay deleted
     assert(got(1L) == "A1" && got(21L) == "new")
