@@ -113,29 +113,39 @@ object GraftApp {
       case "run" =>
         val spark = GraftSession.create(
           sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-        // run_all builds (with the locked check) before executing
-        // (orchestrator.rs:221-226)
-        buildLocked(spark, config, lockPath, locked)
-        val hooks = startWebhooks(config)
-        val grpcHandles = startGrpcServers(config)
-        // telemetry endpoint (reference prometheus_server.rs): listener
-        // attaches before any stream starts so counters miss nothing
-        val metrics = config.metricsPort.map { p =>
-          val rec = graft.streaming.StreamMetrics.attach(spark)
-          val h = graft.streaming.MetricsServer.start(p, rec)
-          println(s"metrics: serving /metrics on port ${h.port}")
-          h
-        }
-        try {
-          if (config.streaming)
-            runStreaming(spark, config).foreach(_.awaitTermination())
-          else runBatch(spark, config)
-        } finally {
-          metrics.foreach(_.stop())
-          hooks.foreach(_.stop())
-          grpcHandles.foreach(_.stop())
-          spark.stop()
-        }
+        try run(spark, config, lockPath, locked) finally spark.stop()
+    }
+  }
+
+  /** `dozer run`: build with the locked check, then execute
+    * (orchestrator.rs:221-226 run_all) — one analysis serves both. The
+    * config's ingest servers and metrics endpoint run alongside and stop
+    * when the pipeline does; a streaming config blocks until every sink
+    * query terminates.
+    */
+  private[graft] def run(spark: SparkSession, config: GraftConfig,
+      lockPath: java.nio.file.Path, locked: Boolean): Unit = {
+    if (config.streaming) prepareStreaming(spark, config)
+    val planned = plan(spark, config, config.streaming)
+    checkLock(config, planned.schemas, lockPath, locked)
+    val hooks = startWebhooks(config)
+    val grpcHandles = startGrpcServers(config)
+    // telemetry endpoint (reference prometheus_server.rs): listener
+    // attaches before any stream starts so counters miss nothing
+    val metrics = config.metricsPort.map { p =>
+      val rec = graft.streaming.StreamMetrics.attach(spark)
+      val h = graft.streaming.MetricsServer.start(p, rec)
+      println(s"metrics: serving /metrics on port ${h.port}")
+      h
+    }
+    try {
+      if (config.streaming)
+        startQueries(planned).foreach(_.awaitTermination())
+      else { runPlanned(spark, config, planned); () }
+    } finally {
+      metrics.foreach(_.stop())
+      hooks.foreach(_.stop())
+      grpcHandles.foreach(_.stop())
     }
   }
 
@@ -146,13 +156,8 @@ object GraftApp {
     * every sink references an INTO output and has a legal mode — and
     * return each output table's schema. No sink is written.
     */
-  def build(spark: SparkSession, config: GraftConfig): Map[String, StructType] = {
-    val analyzed = analyze(spark, config, config.streaming)
-    analyzed.sinks.foreach { case (sink, df) =>
-      sinkPlan(spark, sink, df, config.streaming)
-    }
-    analyzed.outputs.map { case (t, df) => t -> df.schema }
-  }
+  def build(spark: SparkSession, config: GraftConfig): Map[String, StructType] =
+    plan(spark, config, config.streaming).schemas
 
   /** A config's front half, shared by every entry point: each source with
     * its frame, each INTO output, and each sink with the output it writes.
@@ -180,6 +185,26 @@ object GraftApp {
       sink -> outputs.getOrElse(sink.table,
         throw new IllegalArgumentException(
           s"sink references unknown output table '${sink.table}'"))
+    })
+  }
+
+  /** A config analyzed once, with each sink's output and write: what
+    * `build`, the batch and streaming runs and `main`'s `run` share.
+    */
+  private final case class Planned(outputs: Map[String, DataFrame],
+      sinks: Seq[(SinkConf, DataFrame, Sinks.Write)]) {
+    def schemas: Map[String, StructType] =
+      outputs.map { case (t, df) => t -> df.schema }
+  }
+
+  /** [[analyze]] plus every sink's [[sinkPlan]]: no Spark job runs and
+    * no sink is touched.
+    */
+  private def plan(spark: SparkSession, config: GraftConfig,
+      streaming: Boolean): Planned = {
+    val analyzed = analyze(spark, config, streaming)
+    Planned(analyzed.outputs, analyzed.sinks.map { case (sink, df) =>
+      (sink, df, sinkPlan(spark, sink, df, streaming))
     })
   }
 
@@ -224,6 +249,13 @@ object GraftApp {
   def buildLocked(spark: SparkSession, config: GraftConfig,
       lockPath: java.nio.file.Path, locked: Boolean): Map[String, StructType] = {
     val schemas = build(spark, config)
+    checkLock(config, schemas, lockPath, locked)
+    schemas
+  }
+
+  private def checkLock(config: GraftConfig,
+      schemas: Map[String, StructType], lockPath: java.nio.file.Path,
+      locked: Boolean): Unit = {
     val c = renderContract(config, schemas)
     if (locked) {
       if (!java.nio.file.Files.exists(lockPath))
@@ -236,7 +268,7 @@ object GraftApp {
             "contract changed (sources, output schemas, sinks, or udfs)")
     }
     java.nio.file.Files.writeString(lockPath, c)
-    schemas
+    ()
   }
 
   /** `dozer ui`'s pipeline-contract surface (reference
@@ -652,6 +684,33 @@ object GraftApp {
     config.grpcServers.map(g => graft.sources.GrpcIngest.start(g.port, g.tables))
 
 
+  /** A push-channel source's change rows: its `channel` read as a stream
+    * (or, for a batch run, a snapshot of what was pushed so far) and
+    * decoded map-only into [[graft.cdc.ChangeModel]] rows against the
+    * source's row schema. `kind` is the wire format: `webhook` JSON verb
+    * envelopes; `arrow` IPC frames clients push through
+    * `ArrowIngest.ingest` (gRPC adapter parity — grpc/src/adapter/
+    * arrow.rs); `grpc` envelopes, one per IngestRequest of the
+    * config-declared IngestService (grpc/src/adapter/default.rs).
+    */
+  private def pushChanges(spark: SparkSession, s: SourceConf, kind: String,
+      streaming: Boolean): DataFrame = {
+    val chan = s.options.getOrElse("channel",
+      throw new IllegalArgumentException(
+        s"$kind source '${s.name}' needs a channel option"))
+    val feed =
+      if (streaming) graft.sources.Sources.push(spark, chan)
+      else graft.sources.Sources.pushSnapshot(spark, chan)
+    val schema = s.schema.getOrElse(throw new IllegalArgumentException(
+      s"$kind source '${s.name}' needs a row schema"))
+    val schemaName = s.options.getOrElse("schema_name", s.name)
+    kind match {
+      case "webhook" => graft.sources.WebhookServer.changes(feed, schema)
+      case "arrow" => graft.sources.ArrowIngest.changes(feed, schemaName, schema)
+      case _ => graft.sources.GrpcIngest.changes(feed, schemaName, schema)
+    }
+  }
+
   /** Resolve one source to a DataFrame: plain format reads (schema
     * inferred from existing files for streams), or the webhook decode
     * path — the push channel's verb envelopes lifted to [[graft.cdc.ChangeModel]]
@@ -660,44 +719,8 @@ object GraftApp {
   private def loadSource(spark: SparkSession, s: SourceConf,
       streaming: Boolean): DataFrame = {
     val raw = s.decode match {
-      case Some("webhook") =>
-        val chan = s.options.getOrElse("channel",
-          throw new IllegalArgumentException(
-            s"webhook source '${s.name}' needs a channel option"))
-        val feed =
-          if (streaming) graft.sources.Sources.push(spark, chan)
-          else graft.sources.Sources.pushSnapshot(spark, chan)
-        graft.sources.WebhookServer.changes(feed, s.schema.getOrElse(
-          throw new IllegalArgumentException(
-            s"webhook source '${s.name}' needs a row schema")))
-      case Some("arrow") =>
-        // Arrow IPC push ingest (gRPC adapter parity — grpc/src/adapter/
-        // arrow.rs): clients push IPC frames onto the bounded channel via
-        // ArrowIngest.ingest; both scan phases decode map-only.
-        val chan = s.options.getOrElse("channel",
-          throw new IllegalArgumentException(
-            s"arrow source '${s.name}' needs a channel option"))
-        val schemaName = s.options.getOrElse("schema_name", s.name)
-        val feed =
-          if (streaming) graft.sources.Sources.push(spark, chan)
-          else graft.sources.Sources.pushSnapshot(spark, chan)
-        graft.sources.ArrowIngest.changes(feed, schemaName, s.schema.getOrElse(
-          throw new IllegalArgumentException(
-            s"arrow source '${s.name}' needs a row schema")))
-      case Some("grpc") =>
-        // gRPC typed ingest (grpc/src/adapter/default.rs): the config-
-        // declared IngestService pushes one envelope per IngestRequest
-        // onto the channel; decode lifts them to ChangeModel rows.
-        val chan = s.options.getOrElse("channel",
-          throw new IllegalArgumentException(
-            s"grpc source '${s.name}' needs a channel option"))
-        val schemaName = s.options.getOrElse("schema_name", s.name)
-        val feed =
-          if (streaming) graft.sources.Sources.push(spark, chan)
-          else graft.sources.Sources.pushSnapshot(spark, chan)
-        graft.sources.GrpcIngest.changes(feed, schemaName, s.schema.getOrElse(
-          throw new IllegalArgumentException(
-            s"grpc source '${s.name}' needs a row schema")))
+      case Some(kind @ ("webhook" | "arrow" | "grpc")) =>
+        pushChanges(spark, s, kind, streaming)
       case Some("kafka_plain") | Some("kafka_connect") =>
         // Config-declared Kafka source over the NATIVE DataSource V2
         // (KafkaConfig, ingestion_types.rs:173-177): Kafka offsets ARE
@@ -1073,11 +1096,14 @@ object GraftApp {
   /** Run a batch pipeline: returns the INTO outputs after sinking. */
   def runBatch(spark: SparkSession, config: GraftConfig): Map[String, DataFrame] = {
     require(!config.streaming, "use runStreaming for streaming configs")
-    val analyzed = analyze(spark, config, streaming = false)
-    // every sink is planned before the first one writes
-    analyzed.sinks
-      .map { case (sink, df) => (df, sinkPlan(spark, sink, df, streaming = false)) }
-      .foreach { case (df, write) => write(df, None) }
+    runPlanned(spark, config, plan(spark, config, streaming = false))
+  }
+
+  /** A planned batch run: every sink was planned before the first one
+    * writes. */
+  private def runPlanned(spark: SparkSession, config: GraftConfig,
+      planned: Planned): Map[String, DataFrame] = {
+    planned.sinks.foreach { case (_, df, write) => write(df, None) }
     // table maintenance AFTER the sinks: groom what this run just wrote
     config.maintenance.foreach { m =>
       m.format match {
@@ -1141,11 +1167,18 @@ object GraftApp {
             retainMillis = m.vacuumRetainMillis)
       }
     }
-    analyzed.outputs
+    planned.outputs
   }
 
   /** Run a streaming pipeline: one StreamingQuery per sink. */
   def runStreaming(spark: SparkSession, config: GraftConfig): Seq[StreamingQuery] = {
+    prepareStreaming(spark, config)
+    startQueries(plan(spark, config, streaming = true))
+  }
+
+  /** The session settings every streaming run starts from. */
+  private def prepareStreaming(spark: SparkSession,
+      config: GraftConfig): Unit = {
     require(config.maintenance.isEmpty,
       "maintenance: runs after BATCH pipelines only — groom tables from " +
         "a separate batch config (streams never quiesce)")
@@ -1161,10 +1194,11 @@ object GraftApp {
     // every run's query clones the session: keep generated code on the
     // executors' shared class loader so runs after the first reuse it
     GraftSession.shareGeneratedCode(spark)
-    val planned = analyze(spark, config, streaming = true).sinks.map { case (sink, df) =>
-      (sink, df, sinkPlan(spark, sink, df, streaming = true))
-    }
-    planned.map { case (sink, df, write) =>
+  }
+
+  /** One query per sink of a planned streaming config. */
+  private def startQueries(planned: Planned): Seq[StreamingQuery] =
+    planned.sinks.map { case (sink, df, write) =>
       // a dummy sink keeps no state worth resuming: a throwaway checkpoint
       val checkpoint = sink.checkpoint.getOrElse(
         if (sink.mode == "dummy")
@@ -1179,5 +1213,4 @@ object GraftApp {
       Sinks.stream(df, write, outputMode, checkpoint,
         appId = s"graft-${sink.table}", queryName = Some(sink.table))
     }
-  }
 }

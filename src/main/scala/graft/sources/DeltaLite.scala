@@ -237,6 +237,25 @@ object DeltaLite {
     checkMappingMode(Option(meta.get("configuration")).flatMap(c =>
       Option(c.get("delta.columnMapping.mode")).map(_.asText)))
 
+  /** The fields of one JSON `metaData` action that replay keeps. */
+  private final case class MetaDataFields(schemaJson: String,
+      partitionColumns: Seq[String], configuration: Map[String, String],
+      id: Option[String]) {
+    def schema: StructType =
+      DataType.fromJson(schemaJson).asInstanceOf[StructType]
+  }
+
+  private def parseMetaData(m: JsonNode): MetaDataFields = {
+    val conf = mutable.LinkedHashMap.empty[String, String]
+    Option(m.get("configuration")).foreach(_.fields.asScala.foreach { e =>
+      if (!e.getValue.isNull) conf(e.getKey) = e.getValue.asText
+    })
+    MetaDataFields(m.get("schemaString").asText,
+      Option(m.get("partitionColumns")).toSeq
+        .flatMap(_.elements.asScala.map(_.asText)),
+      conf.toMap, Option(m.get("id")).filterNot(_.isNull).map(_.asText))
+  }
+
   /** Parse an add action's deletionVector descriptor (null → none). */
   private def parseDv(add: JsonNode): Option[DeletionVectors.Descriptor] =
     Option(add.get("deletionVector")).filterNot(_.isNull).map { dv =>
@@ -489,21 +508,11 @@ object DeltaLite {
             if (action.has("metaData")) {
               val m = action.get("metaData")
               mappingMode = checkMetaData(m)
-              schemaJson = Some(m.get("schemaString").asText)
-              partCols = Option(m.get("partitionColumns"))
-                .map(n => (0 until n.size).map(n.get(_).asText).toSeq)
-                .getOrElse(Nil)
-              configuration = Option(m.get("configuration")).map { c =>
-                val out = mutable.LinkedHashMap.empty[String, String]
-                val it2 = c.fields()
-                while (it2.hasNext) {
-                  val e = it2.next()
-                  if (!e.getValue.isNull) out(e.getKey) = e.getValue.asText
-                }
-                out.toMap
-              }.getOrElse(Map.empty)
-              Option(m.get("id")).filterNot(_.isNull)
-                .foreach(id => tableId = id.asText)
+              val md = parseMetaData(m)
+              schemaJson = Some(md.schemaJson)
+              partCols = md.partitionColumns
+              configuration = md.configuration
+              md.id.foreach(tableId = _)
             }
             if (action.has("add")) {
               val a = action.get("add")
@@ -579,21 +588,11 @@ object DeltaLite {
         if (action.has("metaData")) {
           val m = action.get("metaData")
           mappingMode = checkMetaData(m)
-          schemaJson = Some(m.get("schemaString").asText)
-          partCols = Option(m.get("partitionColumns"))
-            .map(n => (0 until n.size).map(n.get(_).asText).toSeq)
-            .getOrElse(Nil)
-          configuration = Option(m.get("configuration")).map { c =>
-            val out = mutable.LinkedHashMap.empty[String, String]
-            val it2 = c.fields()
-            while (it2.hasNext) {
-              val e = it2.next()
-              if (!e.getValue.isNull) out(e.getKey) = e.getValue.asText
-            }
-            out.toMap
-          }.getOrElse(Map.empty)
-          Option(m.get("id")).filterNot(_.isNull)
-            .foreach(id => tableId = id.asText)
+          val md = parseMetaData(m)
+          schemaJson = Some(md.schemaJson)
+          partCols = md.partitionColumns
+          configuration = md.configuration
+          md.id.foreach(tableId = _)
         }
         if (action.has("add")) {
           val a = action.get("add")
@@ -1087,6 +1086,25 @@ object DeltaLite {
       else c.as(physicalName(f))
     }.toSeq ++ extra).toIndexedSeq: _*)
 
+  /** A logical frame in the shape the table's data files carry, and the
+    * partition columns to stage it by, in the same naming: physical names
+    * and field ids on a column-mapped table ([[toPhysical]]), the table's
+    * own columns otherwise. `extra` columns (materialized row ids,
+    * `_change_type`) ride after the table's.
+    */
+  private def physicalFrame(df: DataFrame, schema: StructType,
+      partCols: Seq[String], mapped: Boolean,
+      extra: Seq[org.apache.spark.sql.Column] = Nil)
+      : (DataFrame, Seq[String]) =
+    if (!mapped)
+      (if (extra.isEmpty) df
+       else df.select(schema.fieldNames.map(col).toIndexedSeq ++ extra: _*),
+        partCols)
+    else (toPhysical(df, schema, extra), partCols.map(c =>
+      physicalName(schema.fields.find(_.name == c).getOrElse(
+        throw new IllegalArgumentException(
+          s"partition column $c missing from the Delta schema")))))
+
   /** Assign fresh columnMapping metadata to every field (nested
     * included): ids startId+1.. in walk order. The physical name
     * defaults to the CURRENT name — the delta-spark UPGRADE convention,
@@ -1439,14 +1457,7 @@ object DeltaLite {
     }
   }
 
-  /** Stage `df` as parquet in ONE distributed pass, then move the part
-    * files into the table root under their staged (collision-free)
-    * names. Per-file stats (numRecords/minValues/maxValues/nullCount)
-    * come straight from the parquet footers the write produced
-    * ([[ParquetFooterStats]]) — no second scan of the staged data, the
-    * same inline-stats shape delta-spark collects during its writes.
-    * Returns (name, size, statsJson) per data file.
-    */
+  /** The spec's per-file stats JSON from one file's parquet footer. */
   private def statsJsonFor(fst: ParquetFooterStats.FileStats,
       eligible: Seq[org.apache.spark.sql.types.StructField]): String = {
     val node = mapper.createObjectNode()
@@ -1483,7 +1494,8 @@ object DeltaLite {
   }
 
   /** OPTIMIZED WRITE (delta-spark's optimizedWrite analogue, guide §6
-    * output-file sizing): an AQE REBALANCE above the batch sizes staged
+    * output-file sizing) for [[stage]]'s unpartitioned path: an AQE
+    * REBALANCE above the batch sizes staged
     * files to `spark.sql.adaptive.advisoryPartitionSizeInBytes` — a
     * tiny batch lands in ONE file instead of one sliver per upstream
     * shuffle partition (the r19 q165 profile: a 1000-row identity write
@@ -1491,10 +1503,12 @@ object DeltaLite {
     * and >32-path listing job paid 32+ tasks forever after), and a huge
     * batch splits to advisory-sized files. Scale-adaptive by
     * construction: the knob is bytes, not a core count. Skipped when
-    * the CALLER's plan root is an explicit repartition (layout rigs
-    * like the clustered-compact fixture own their file layout, and a
-    * small [[upsert]]'s `coalesce(1)` rewrite is one file already) or
-    * when `graft.delta.optimizedWrite=false`. Identity/rowid fill
+    * `graft.delta.optimizedWrite=false`, and when the CALLER's plan
+    * root is an explicit repartition or coalesce, which owns its file
+    * layout: [[compact]]'s packed and clustered rewrites, layout rigs
+    * like the clustered-compact fixture, and the `coalesce(1)` a small
+    * [[upsert]] stages through (one file by construction, so no
+    * rebalance shuffle is added above it). Identity/rowid fill
     * expressions are computed BELOW the added exchange (projections
     * with nondeterministic producers are never pushed through it), so
     * allocation still reads the persisted batch's partition layout.
@@ -1529,63 +1543,34 @@ object DeltaLite {
     spark.conf.getOption("graft.delta.optimizedWrite").forall(_.toBoolean) &&
       spark.conf.getOption("spark.sql.adaptive.enabled").forall(_.toBoolean)
 
-  private def stageWithStats(spark: SparkSession, df: DataFrame,
-      root: Path, fs: FileSystem,
-      statsExclude: Set[String] = Set.empty)
-      : Seq[(String, Long, String)] = {
-    val stage = new Path(root.toString + "_stage_" +
-      java.util.UUID.randomUUID.toString.take(8))
-    rebalanceForStaging(spark, df).write.mode("overwrite")
-      .parquet(stage.toString)
-    // statsExclude: physical-only companion columns (materialized row
-    // ids) never surface in the log's stats JSON — they are not in the
-    // logical schema and would confuse foreign pruners
-    val eligible = df.schema.fields.filter(statsEligible)
-      .filterNot(f => statsExclude(f.name)).toSeq
-    val conf = spark.sparkContext.hadoopConfiguration
-    val parts = fs.listStatus(stage)
-      .filter(_.getPath.getName.startsWith("part-")).toIndexedSeq
-    // icebergCompatV2 member ids (list element / map key,value — not
-    // StructFields, Spark's writer can't stamp them) AND nested named
-    // fields whose id rides only `delta.columnMapping.id` (which the
-    // writer ignores): the staged footers are patched in place before
-    // the move. `needsStamp` covers both — a struct-only mapped schema
-    // restamps the same as its container siblings.
-    if (ParquetIdStamp.needsStamp(df.schema))
-      ParquetIdStamp.stampAll(conf, parts.map(_.getPath),
-        ParquetIdStamp.pathIds(df.schema))
-    // footers read with the bounded pool — never one serialized
-    // round-trip per part file
-    val footerStats = ParquetFooterStats.readAll(conf,
-      parts.map(_.getPath), df.schema)
-    // an empty task's 0-row part file never becomes an add — an empty
-    // add is log noise every reader must still open and scan-plan for
-    // (and an all-dead copy-on-write rewrite must net to a bare remove)
-    val moved = parts.filter(st => footerStats(st.getPath).rows > 0L)
-      .map { st =>
-        val name = st.getPath.getName
-        require(fs.rename(st.getPath, new Path(root, name)),
-          s"staging move failed for $name")
-        (name, st.getLen, statsJsonFor(footerStats(st.getPath), eligible))
-      }
-    fs.delete(stage, true)
-    moved
-  }
-
-  /** Stage a PARTITIONED batch in ONE distributed `partitionBy` pass
-    * (the same single-pass layout [[IcebergLite]] staging uses — never
-    * one scan per partition tuple), then move each leaf under the table
-    * root KEEPING the hive-escaped `c=v/` directory chain Spark wrote.
-    * Partition values recover from the directory segments (Delta's
-    * `partitionValues` are strings in the log — the unescaped segment
-    * IS the serialized value; `__HIVE_DEFAULT_PARTITION__` → null).
-    * Stats cover only the data columns (partition columns are not in
-    * the files). Returns (relPath, size, statsJson, partitionValues).
+  /** One file a commit staged under the table root: its path relative
+    * to the root, size, row count, stats JSON and partition values.
     */
-  private def stagePartitionedWithStats(spark: SparkSession,
-      df: DataFrame, root: Path, fs: FileSystem, partCols: Seq[String],
-      statsExclude: Set[String] = Set.empty)
-      : Seq[(String, Long, String, Map[String, Option[String]])] = {
+  private final case class StagedFile(path: String, size: Long, rows: Long,
+      stats: String, partitionValues: Map[String, Option[String]])
+
+  /** Stage `df` as parquet in ONE distributed pass into a
+    * `<table>_stage_<uuid>` sibling, then move each part file under the
+    * table root, below `under` (`_change_data` for CDF files) and, when
+    * `partCols` is non-empty, the hive-escaped `c=v/` directory chain
+    * the `partitionBy` write left, keeping its staged (collision-free)
+    * name. An unpartitioned write is sized by [[rebalanceForStaging]]; a
+    * partitioned one is clustered onto its partition tuples (one pass,
+    * never one scan per tuple). Per-file stats (numRecords/minValues/
+    * maxValues/nullCount over the data columns, partition columns and
+    * `statsExclude` left out) come straight from the parquet footers the
+    * write produced ([[ParquetFooterStats]]) — no second scan of the
+    * staged data, the same inline-stats shape delta-spark collects during
+    * its writes. Partition values recover from the directory segments
+    * (Delta's `partitionValues` are strings in the log — the unescaped
+    * segment IS the serialized value; `__HIVE_DEFAULT_PARTITION__` →
+    * null). The stage directory is deleted whether or not the moves
+    * succeed.
+    */
+  private def stage(spark: SparkSession, df: DataFrame, root: Path,
+      fs: FileSystem, partCols: Seq[String],
+      statsExclude: Seq[String] = Nil,
+      under: String = ""): Seq[StagedFile] = {
     partCols.foreach { c =>
       val f = df.schema.fields.find(_.name == c).getOrElse(
         throw new IllegalArgumentException(
@@ -1600,87 +1585,105 @@ object DeltaLite {
             "serialization (use an atomic type)")
       }
     }
-    val stage = new Path(root.toString + "_stage_" +
+    val stageDir = new Path(root.toString + "_stage_" +
       java.util.UUID.randomUUID.toString.take(8))
-    // CLUSTERED staging (delta-spark's "optimized write" shape): hash
-    // the rows onto their partition tuple first, so each tuple lands in
-    // ONE task and writes ONE file — without it every shuffle partition
-    // writes a sliver per touched dir (tasks × dirs small files, the
-    // thing compaction exists to undo). `graft.delta.clusteredStaging`
-    // = false restores the unclustered write for skewed tuples.
-    val clustered =
-      if (spark.conf.getOption("graft.delta.clusteredStaging")
-          .forall(_.toBoolean))
-        // explicit count: AQE preserves it (a column-only repartition
-        // coalesces tiny batches to ONE task, serializing the write);
-        // hash collisions just mean one task writes two dirs — still
-        // one file per tuple
-        df.repartition(spark.sessionState.conf.numShufflePartitions,
-          partCols.map(col): _*)
-      else df
-    clustered.write.partitionBy(partCols: _*).mode("overwrite")
-      .parquet(stage.toString)
-    val dataSchema = StructType(
-      df.schema.fields.filterNot(f => partCols.contains(f.name)))
-    val eligible = dataSchema.fields.filter(statsEligible)
-      .filterNot(f => statsExclude(f.name)).toSeq
-    val conf = spark.sparkContext.hadoopConfiguration
-    val maxParts = spark.conf
-      .getOption("graft.delta.maxPartitionsPerCommit")
-      .map(_.toInt).getOrElse(256)
-    def leaves(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { s =>
-        if (s.isDirectory) leaves(s.getPath)
-        else if (s.getPath.getName.startsWith("part-")) Seq(s) else Nil
+    val writer =
+      if (partCols.isEmpty) rebalanceForStaging(spark, df).write
+      else {
+        // CLUSTERED staging (delta-spark's "optimized write" shape): hash
+        // the rows onto their partition tuple first, so each tuple lands
+        // in ONE task and writes ONE file — without it every shuffle
+        // partition writes a sliver per touched dir (tasks × dirs small
+        // files, the thing compaction exists to undo).
+        // `graft.delta.clusteredStaging` = false restores the unclustered
+        // write for skewed tuples.
+        val clustered =
+          if (spark.conf.getOption("graft.delta.clusteredStaging")
+              .forall(_.toBoolean))
+            // explicit count: AQE preserves it (a column-only repartition
+            // coalesces tiny batches to ONE task, serializing the write);
+            // hash collisions just mean one task writes two dirs — still
+            // one file per tuple
+            df.repartition(spark.sessionState.conf.numShufflePartitions,
+              partCols.map(col): _*)
+          else df
+        clustered.write.partitionBy(partCols: _*)
       }
-    val files0 = leaves(stage)
-    // icebergCompatV2 member ids + columnMapping-only nested fields —
-    // same footer patch gate as the unpartitioned staging (partition
-    // columns are not in the files, so their paths simply never match)
-    if (ParquetIdStamp.needsStamp(dataSchema))
-      ParquetIdStamp.stampAll(conf, files0.map(_.getPath),
-        ParquetIdStamp.pathIds(dataSchema))
-    val footerStats = ParquetFooterStats.readAll(conf,
-      files0.map(_.getPath), dataSchema)
-    // 0-row part files never become adds (same contract as the
-    // unpartitioned staging) — partitionBy rarely writes them, but a
-    // hash-collision task that got only empty groups can
-    val files = files0.filter(st => footerStats(st.getPath).rows > 0L)
-    val out = files.map { st =>
-      // the dir chain between the stage root and the file, in spec
-      // order (partitionBy writes them outermost-first)
-      // listStatus paths come back fully qualified (file:/…) so Path
-      // equality with the unqualified stage root never fires — the
-      // stage dir's UUID-suffixed NAME is the reliable stop marker
-      val segs = Iterator.iterate(st.getPath.getParent)(_.getParent)
-        .takeWhile(p => p != null && p.getName != stage.getName)
-        .map(_.getName).toSeq.reverse
-      require(segs.length == partCols.length &&
-          segs.zip(partCols).forall { case (s, c) =>
-            s.startsWith(c + "=") },
-        s"unexpected stage layout under $stage: ${segs.mkString("/")}")
-      val pv: Map[String, Option[String]] = segs.map { seg =>
-        val i = seg.indexOf('=')
-        val raw = seg.substring(i + 1)
-        seg.substring(0, i) -> (
-          if (raw == "__HIVE_DEFAULT_PARTITION__") None
-          else Some(IcebergLite.unescapeDirValue(raw)))
-      }.toMap
-      val fst = footerStats(st.getPath)
-      val relPath = (segs :+ st.getPath.getName).mkString("/")
-      val dataDir = segs.foldLeft(root)((p, s) => new Path(p, s))
-      fs.mkdirs(dataDir)
-      require(fs.rename(st.getPath, new Path(dataDir, st.getPath.getName)),
-        s"staging move failed for $relPath")
-      (relPath, st.getLen, statsJsonFor(fst, eligible), pv)
-    }.toIndexedSeq
-    val tuples = out.map(_._4).toSet
-    require(tuples.size <= maxParts,
-      s"one commit may write at most $maxParts partitions, got " +
-        s"${tuples.size} — split the batch or raise " +
-        "graft.delta.maxPartitionsPerCommit")
-    fs.delete(stage, true)
-    out
+    try {
+      writer.mode("overwrite").parquet(stageDir.toString)
+      val dataSchema = StructType(
+        df.schema.fields.filterNot(f => partCols.contains(f.name)))
+      // statsExclude: physical-only companion columns (materialized row
+      // ids) never surface in the log's stats JSON — they are not in the
+      // logical schema and would confuse foreign pruners
+      val eligible = dataSchema.fields.filter(statsEligible)
+        .filterNot(f => statsExclude.contains(f.name)).toSeq
+      val conf = spark.sparkContext.hadoopConfiguration
+      def leaves(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+        fs.listStatus(p).toSeq.flatMap { s =>
+          if (s.isDirectory) leaves(s.getPath)
+          else if (s.getPath.getName.startsWith("part-")) Seq(s) else Nil
+        }
+      val parts = leaves(stageDir)
+      // icebergCompatV2 member ids (list element / map key,value — not
+      // StructFields, Spark's writer can't stamp them) AND nested named
+      // fields whose id rides only `delta.columnMapping.id` (which the
+      // writer ignores): the staged footers are patched in place before
+      // the move. Partition columns are not in the files, so their paths
+      // never match.
+      if (ParquetIdStamp.needsStamp(dataSchema))
+        ParquetIdStamp.stampAll(conf, parts.map(_.getPath),
+          ParquetIdStamp.pathIds(dataSchema))
+      // footers read with the bounded pool — never one serialized
+      // round-trip per part file
+      val footerStats = ParquetFooterStats.readAll(conf,
+        parts.map(_.getPath), dataSchema)
+      // an empty task's 0-row part file never becomes an add — an empty
+      // add is log noise every reader must still open and scan-plan for
+      // (and an all-dead copy-on-write rewrite must net to a bare remove)
+      val kept = parts.filter(st => footerStats(st.getPath).rows > 0L)
+        .map { st =>
+          // the dir chain between the stage root and the file, in spec
+          // order (partitionBy writes them outermost-first). listStatus
+          // paths come back fully qualified (file:/…), so Path equality
+          // with the unqualified stage root never fires — the stage dir's
+          // UUID-suffixed NAME is the reliable stop marker
+          val segs = Iterator.iterate(st.getPath.getParent)(_.getParent)
+            .takeWhile(p => p != null && p.getName != stageDir.getName)
+            .map(_.getName).toSeq.reverse
+          require(segs.length == partCols.length &&
+              segs.zip(partCols).forall { case (s, c) =>
+                s.startsWith(c + "=") },
+            s"unexpected stage layout under $stageDir: ${segs.mkString("/")}")
+          val pv: Map[String, Option[String]] = segs.map { seg =>
+            val i = seg.indexOf('=')
+            val raw = seg.substring(i + 1)
+            seg.substring(0, i) -> (
+              if (raw == "__HIVE_DEFAULT_PARTITION__") None
+              else Some(IcebergLite.unescapeDirValue(raw)))
+          }.toMap
+          (st, (if (under.isEmpty) segs else under +: segs), pv)
+        }
+      if (partCols.nonEmpty) {
+        val maxParts = spark.conf
+          .getOption("graft.delta.maxPartitionsPerCommit")
+          .map(_.toInt).getOrElse(256)
+        val tuples = kept.map(_._3).toSet
+        require(tuples.size <= maxParts,
+          s"one commit may write at most $maxParts partitions, got " +
+            s"${tuples.size} — split the batch or raise " +
+            "graft.delta.maxPartitionsPerCommit")
+      }
+      kept.map(_._2).distinct.filter(_.nonEmpty).foreach(dir =>
+        fs.mkdirs(dir.foldLeft(root)((p, s) => new Path(p, s))))
+      kept.map { case (st, dir, pv) =>
+        val rel = (dir :+ st.getPath.getName).mkString("/")
+        require(fs.rename(st.getPath, new Path(root, rel)),
+          s"staging move failed for $rel")
+        val fst = footerStats(st.getPath)
+        StagedFile(rel, st.getLen, fst.rows, statsJsonFor(fst, eligible), pv)
+      }.toIndexedSeq
+    } finally { fs.delete(stageDir, true); () }
   }
 
   /** Reader features a legacy `minReaderVersion` implies — what an
@@ -2288,6 +2291,59 @@ object DeltaLite {
         "delta.rowTracking.materializedRowCommitVersionColumnName")
     } yield (i, v)
 
+  /** The materialized columns a rewrite of a row-tracked table writes
+    * each row's stable (id, commit version) into. `minted`: the table
+    * records no names yet, so this commit — its first id-materializing
+    * rewrite — generates them and must record them in its `metaData`.
+    */
+  private final case class RowIdCols(id: String, version: String,
+      minted: Boolean) {
+    def names: Seq[String] = Seq(id, version)
+    /** `_row_id` / `_row_commit_version` under the materialized names */
+    def columns: Seq[org.apache.spark.sql.Column] =
+      Seq(col("_row_id").as(id), col("_row_commit_version").as(version))
+  }
+
+  private def rowIdCols(snap: Snapshot): Option[RowIdCols] =
+    if (!rowTrackingActive(snap)) None
+    else Some(materializedRowIdCols(snap.configuration) match {
+      case Some((i, v)) => RowIdCols(i, v, minted = false)
+      case None =>
+        val sfx = java.util.UUID.randomUUID.toString.take(8)
+        RowIdCols(s"_row-id-col-$sfx", s"_row-commit-version-col-$sfx",
+          minted = true)
+    })
+
+  /** `schema` with identity columns' advanced high-water marks. */
+  private def withIdentityHwm(schema: StructType,
+      idHwm: Map[String, Long]): StructType =
+    if (idHwm.isEmpty) schema
+    else StructType(schema.fields.map { f =>
+      idHwm.get(f.name) match {
+        case Some(h) => f.copy(metadata =
+          new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(f.metadata)
+            .putLong("delta.identity.highWaterMark", h).build())
+        case None => f
+      }
+    })
+
+  /** The `metaData` line a rewrite of `snap` restates when it advances
+    * table metadata: the materialized row-id column names it minted
+    * (without them no reader could resolve the materialized values back
+    * to ids) and/or identity columns' new high-water marks.
+    */
+  private def rewriteMetaData(snap: Snapshot, rowIds: Option[RowIdCols],
+      idHwm: Map[String, Long], now: Long): Option[String] = {
+    val minted = rowIds.filter(_.minted).map(r => Map(
+      "delta.rowTracking.materializedRowIdColumnName" -> r.id,
+      "delta.rowTracking.materializedRowCommitVersionColumnName" ->
+        r.version)).getOrElse(Map.empty)
+    if (minted.isEmpty && idHwm.isEmpty) None
+    else Some(metaDataAction(snap.tableId, withIdentityHwm(snap.schema, idHwm),
+      snap.partitionColumns, snap.configuration ++ minted, now))
+  }
+
   /** LIQUID CLUSTERING columns from the `delta.clustering` domain
     * (the `clustering` writer feature). Appends are legal UNCLUSTERED
     * (delta-spark's own contract — OPTIMIZE does the layout work);
@@ -2724,20 +2780,8 @@ object DeltaLite {
     // distributed pass over the matched scan — CDF materializes
     // changes by definition)
     if (cdf) {
-      val cdcRows0 = matched.drop("__file", "__i")
-      val mappedT = snap.columnMappingMode != "none"
-      val cdcRows = (if (mappedT)
-          toPhysicalCdc(cdcRows0.withColumn("_change_type",
-            org.apache.spark.sql.functions.lit("delete")), snap.schema)
-        else cdcRows0.withColumn("_change_type",
-          org.apache.spark.sql.functions.lit("delete")))
-      val stagePartCols =
-        if (mappedT) snap.partitionColumns.map(c => physicalName(
-          snap.schema.fields.find(_.name == c).get))
-        else snap.partitionColumns
-      stageCdcFiles(spark, cdcRows, root, fs, stagePartCols).foreach {
-        case (rel, sz, pv) => lines += cdcAction(rel, sz, pv, now)
-      }
+      lines ++= cdcLines(spark, root, fs, snap, matched.drop("__file", "__i")
+        .withColumn("_change_type", lit("delete")), now)
       matched.unpersist()
       ()
     }
@@ -2773,15 +2817,7 @@ object DeltaLite {
     // row tracking composes (UniForm + rowTracking is a common foreign
     // table shape): survivors rewrite with their stable (id, version)
     // MATERIALIZED, same contract as OPTIMIZE/MERGE
-    val rowTracked = rowTrackingActive(snap)
-    val mintedMatCols = rowTracked &&
-      materializedRowIdCols(snap.configuration).isEmpty
-    val (matIdCol, matVerCol) =
-      if (!rowTracked) ("", "")
-      else materializedRowIdCols(snap.configuration).getOrElse {
-        val sfx = java.util.UUID.randomUUID.toString.take(8)
-        (s"_row-id-col-$sfx", s"_row-commit-version-col-$sfx")
-      }
+    val rowIds = rowIdCols(snap)
     val relByPath: Map[String, String] =
       candFiles.keys.map(p => encodedPathKey(abs(p)) -> p).toMap
     val cdf = cdfEnabled(snap)
@@ -2806,75 +2842,30 @@ object DeltaLite {
     // rewritten files
     val retained = scanFilesWithMeta(spark, tablePath, snap,
       snap.files.filter(kv => touched.contains(kv._1)), withPos = false,
-      rowIds = rowTracked)
+      rowIds = rowIds.nonEmpty)
       .filter(not(coalesce(cond, lit(false))))
       .drop("__file")
-    val mapped = snap.columnMappingMode != "none"
-    val idExtra =
-      if (!rowTracked) Nil
-      else Seq(col("_row_id").as(matIdCol),
-        col("_row_commit_version").as(matVerCol))
-    val outStaged =
-      if (mapped) toPhysical(retained, snap.schema, extra = idExtra)
-      else if (rowTracked) retained.select(
-        snap.schema.fieldNames.map(col).toIndexedSeq ++ idExtra: _*)
-      else retained
-    val partFields = snap.partitionColumns.map(c =>
-      snap.schema.fields.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(
-          s"partition column $c missing from the Delta schema")))
-    val stagePartCols =
-      if (mapped) partFields.map(physicalName) else snap.partitionColumns
+    val (outStaged, stagePartCols) = physicalFrame(retained, snap.schema,
+      snap.partitionColumns, snap.columnMappingMode != "none",
+      rowIds.toSeq.flatMap(_.columns))
     // staging drops 0-row part files, so an all-dead rewrite nets to a
     // bare remove (the spec shape) with no empty add
-    val statsExcl: Set[String] =
-      if (rowTracked) Set(matIdCol, matVerCol) else Set.empty
-    val moved: Seq[(String, Long, String, Map[String, Option[String]])] =
-      if (snap.partitionColumns.isEmpty)
-        stageWithStats(spark, outStaged, root, fs, statsExcl)
-          .map { case (n, sz, st) =>
-            (n, sz, st, Map.empty[String, Option[String]])
-          }
-      else stagePartitionedWithStats(spark, outStaged, root, fs,
-        stagePartCols, statsExcl)
+    val staged = stage(spark, outStaged, root, fs, stagePartCols,
+      rowIds.toSeq.flatMap(_.names))
     val now = 1L
-    val newVersion = snap.version + 1
-    val lines = mutable.ArrayBuffer.empty[String]
-    lines += commitInfoAction("DELETE", Map("mode" -> "copyOnWrite"),
-      now, if (ictEnabled(snap)) Some(nextIct(fs, logDir, snap)) else None)
-    if (mintedMatCols)
-      lines += metaDataAction(snap.tableId, snap.schema,
-        snap.partitionColumns, snap.configuration ++ Map(
-          "delta.rowTracking.materializedRowIdColumnName" -> matIdCol,
-          "delta.rowTracking.materializedRowCommitVersionColumnName" ->
-            matVerCol), now)
-    touched.toSeq.sorted.foreach(p =>
-      lines += removeAction(rawPath(snap, p), now))
-    var nextRid = if (rowTracked) rowIdHighWaterMark(snap) + 1 else 0L
-    moved.foreach { case (name, size, st, pvv) =>
-      val rid = if (!rowTracked) None else {
-        val rows = Option(mapper.readTree(st).get("numRecords"))
-          .map(_.asLong).getOrElse(0L)
-        val b = nextRid; nextRid += rows
-        Some((b, newVersion))
+    val head = commitInfoAction("DELETE", Map("mode" -> "copyOnWrite"),
+      now, if (ictEnabled(snap)) Some(nextIct(fs, logDir, snap)) else None) +:
+      rewriteMetaData(snap, rowIds, Map.empty, now).toSeq
+    val cdc =
+      if (!cdf) Nil
+      else {
+        val ls = cdcLines(spark, root, fs, snap, matched.drop("__file")
+          .withColumn("_change_type", lit("delete")), now)
+        matched.unpersist()
+        ls
       }
-      lines += addAction(name, size, st, now, pvv, rowId = rid)
-    }
-    if (rowTracked) lines += rowTrackingDomainAction(nextRid - 1)
-    if (cdf) {
-      val cdcRows0 = matched.drop("__file")
-        .withColumn("_change_type", lit("delete"))
-      val cdcRows = if (mapped) toPhysicalCdc(cdcRows0, snap.schema)
-        else cdcRows0
-      stageCdcFiles(spark, cdcRows, root, fs, stagePartCols).foreach {
-        case (rel, sz, pv) => lines += cdcAction(rel, sz, pv, now)
-      }
-      matched.unpersist()
-      ()
-    }
-    autoSyncUniform(spark, tablePath, Some(snap),
-      commitWithRetry(fs, logDir, tablePath, snap.version + 1,
-        lines.toSeq, ourRemoves = touched, dataChangeMutation = true))
+    commitFiles(spark, tablePath, fs, Some(snap), head, touched, staged,
+      rowIds.nonEmpty, cdc)
   }
 
   /** UNIFORM CONVERSION — the step `icebergCompatV2` exists for:
@@ -2963,6 +2954,45 @@ object DeltaLite {
         }
       }
     committed
+  }
+
+  /** The tail every file-rewriting commit shares — WRITE, MERGE,
+    * copy-on-write DELETE and OPTIMIZE: after `head` (commitInfo and any
+    * protocol/metaData/txn lines), a `remove` per `removed` path of `pre`,
+    * an `add` per staged file, then the `cdc` lines; committed through
+    * [[commitWithRetry]] and mirrored to the UniForm view when the table
+    * opts in ([[autoSyncUniform]]). On a row-tracked table each add takes
+    * a fresh contiguous base-row-id range past the `delta.rowTracking`
+    * domain's high-water mark, with this commit as its default commit
+    * version, and the `delta.rowTracking` domain advances in the same
+    * commit — the line that also pins it single-attempt, so racing
+    * writers never hand out one id range twice. `dataChange = false`
+    * marks a same-rows rewrite (OPTIMIZE); `mutation` is
+    * [[commitWithRetry]]'s `dataChangeMutation`. Returns the version
+    * committed.
+    */
+  private def commitFiles(spark: SparkSession, tablePath: String,
+      fs: FileSystem, pre: Option[Snapshot], head: Seq[String],
+      removed: Set[String], added: Seq[StagedFile], rowTracked: Boolean,
+      cdc: Seq[String] = Nil, dataChange: Boolean = true,
+      mutation: Boolean = true): Long = {
+    val now = 1L
+    val version = pre.fold(0L)(_.version + 1)
+    val removes = removed.toSeq.sorted.map(p =>
+      removeAction(rawPath(pre.get, p), now, dataChange))
+    val baseRowIds =
+      if (!rowTracked) None
+      else Some(added.scanLeft(pre.fold(-1L)(rowIdHighWaterMark) + 1)(
+        _ + _.rows).toIndexedSeq)
+    val adds = added.zipWithIndex.map { case (f, i) =>
+      addAction(f.path, f.size, f.stats, now, f.partitionValues, dataChange,
+        baseRowIds.map(b => (b(i), version)))
+    }
+    val domain = baseRowIds.map(b => rowTrackingDomainAction(b.last - 1))
+    autoSyncUniform(spark, tablePath, pre,
+      commitWithRetry(fs, new Path(tablePath, "_delta_log"), tablePath,
+        version, head ++ removes ++ adds ++ domain ++ cdc,
+        ourRemoves = removed, dataChangeMutation = mutation))
   }
 
   def syncUniform(spark: SparkSession, tablePath: String): Long = {
@@ -3226,15 +3256,7 @@ object DeltaLite {
     // (the spec's REORG contract), so ids survive the rewrite even
     // though positions change; the column names are minted into the
     // configuration on first use
-    val rowTracked = rowTrackingActive(snap)
-    val mintedMatCols = rowTracked &&
-      materializedRowIdCols(snap.configuration).isEmpty
-    val (matIdCol, matVerCol) =
-      if (!rowTracked) ("", "")
-      else materializedRowIdCols(snap.configuration).getOrElse {
-        val sfx = java.util.UUID.randomUUID.toString.take(8)
-        (s"_row-id-col-$sfx", s"_row-commit-version-col-$sfx")
-      }
+    val rowIds = rowIdCols(snap)
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def abs(p: String): String =
@@ -3296,26 +3318,9 @@ object DeltaLite {
             case None => true
           }))
       }
-    val now = 1L
-    val lines = mutable.ArrayBuffer.empty[String]
-    lines += commitInfoAction("OPTIMIZE",
-      Map("purgedDvs" -> dvTouched.size.toString,
-        "rewrittenFiles" -> rewriteByTuple.values.map(_.size).sum.toString),
-      now, if (ictEnabled(snap))
-        Some(nextIct(fs, new Path(tablePath, "_delta_log"), snap))
-      else None)
-    // the commit that first materializes row ids also RECORDS the
-    // minted column names — without them no reader could resolve the
-    // materialized values back to ids
-    if (mintedMatCols)
-      lines += metaDataAction(snap.tableId, snap.schema,
-        snap.partitionColumns, snap.configuration ++ Map(
-          "delta.rowTracking.materializedRowIdColumnName" -> matIdCol,
-          "delta.rowTracking.materializedRowCommitVersionColumnName" ->
-            matVerCol), now)
     // per-file (baseRowId, defaultRowCommitVersion) for default-id rows
     val ridLook =
-      if (!rowTracked) None
+      if (rowIds.isEmpty) None
       else {
         val m = rewriteByTuple.values.flatten.flatMap(p =>
           snap.rowIds.get(p).map(bd => encodedPathKey(abs(p)) -> bd)).toMap
@@ -3328,27 +3333,22 @@ object DeltaLite {
                 "materialized id — cannot rewrite without losing ids")
           }))
       }
-    val readSchemaC =
-      if (!rowTracked) dataSchema
-      else StructType(dataSchema.fields ++ Seq(
-        StructField(matIdCol, LongType, nullable = true),
-        StructField(matVerCol, LongType, nullable = true)))
-    var nextRid = if (rowTracked) rowIdHighWaterMark(snap) + 1 else 0L
-    val newVersion = snap.version + 1
-    rewriteByTuple.foreach { case (pv, paths) =>
+    val readSchemaC = StructType(dataSchema.fields ++
+      rowIds.toSeq.flatMap(_.names)
+        .map(StructField(_, LongType, nullable = true)))
+    val staged = rewriteByTuple.toSeq.flatMap { case (pv, paths) =>
       val scanned0 = spark.read.schema(readSchemaC)
         .parquet(paths.map(abs): _*)
       // stable ids resolve BEFORE the shuffle, while _metadata is
       // still in scope: materialized value wins, else base + position
-      val scanned = ridLook match {
-        case Some(look) => scanned0
-          .withColumn(matIdCol, coalesce(col(matIdCol),
+      val scanned = (rowIds zip ridLook).fold(scanned0) { case (r, look) =>
+        scanned0
+          .withColumn(r.id, coalesce(col(r.id),
             look(col("_metadata.file_path"),
               col("_metadata.row_index"), lit(0))))
-          .withColumn(matVerCol, coalesce(col(matVerCol),
+          .withColumn(r.version, coalesce(col(r.version),
             look(col("_metadata.file_path"),
               col("_metadata.row_index"), lit(1))))
-        case None => scanned0
       }
       val alive = keepRow match {
         case Some(keep) if paths.exists(snap.dvs.contains) =>
@@ -3383,41 +3383,25 @@ object DeltaLite {
       val packed =
         if (snap.columnMappingMode == "none") packed0
         else stampFieldIds(packed0, dataFieldsC,
-          extraCols = if (rowTracked) Seq(matIdCol, matVerCol) else Nil)
-      val moved = stageWithStats(spark, packed, root, fs,
-        statsExclude =
-          if (rowTracked) Set(matIdCol, matVerCol) else Set.empty)
-      paths.foreach(p =>
-        lines += removeAction(rawPath(snap, p), now, dataChange = false))
-      moved.foreach { case (name, size, st) =>
-        // a fully-DV'd input can compact to zero rows — don't re-add
-        val rows = try mapper.readTree(st).get("numRecords").asLong
-          catch { case _: Exception => -1L }
-        if (rows == 0L) fs.delete(new Path(root, name), false)
-        else {
-          // spec: every add on a row-tracked table carries coordinates
-          // (fresh range past the mark — the materialized values are
-          // what actually resolve for these rows)
-          val rid = if (!rowTracked) None else {
-            val base = nextRid
-            nextRid += rows
-            Some((base, newVersion))
-          }
-          lines += addAction(name, size, st, now, pv,
-            dataChange = false, rowId = rid)
-        }
-      }
+          extraCols = rowIds.toSeq.flatMap(_.names))
+      // a fully-DV'd input compacts to zero rows: staging drops the empty
+      // file, so its tuple nets to bare removes
+      stage(spark, packed, root, fs, Nil,
+        rowIds.toSeq.flatMap(_.names))
+        .map(_.copy(partitionValues = pv))
     }
-    // the domain's high-water mark advances with the fresh ranges (and
-    // pins the commit single-attempt — no rebase can double-allocate)
-    if (rowTracked) lines += rowTrackingDomainAction(nextRid - 1)
+    val now = 1L
+    val head = commitInfoAction("OPTIMIZE",
+      Map("purgedDvs" -> dvTouched.size.toString,
+        "rewrittenFiles" -> rewriteByTuple.values.map(_.size).sum.toString),
+      now, if (ictEnabled(snap))
+        Some(nextIct(fs, new Path(tablePath, "_delta_log"), snap))
+      else None) +: rewriteMetaData(snap, rowIds, Map.empty, now).toSeq
     // dataChange:false rewrite — rebases over concurrent appends (the
     // streaming-sink-vs-maintenance-compact race: both commit)
-    autoSyncUniform(spark, tablePath, Some(snap),
-      commitWithRetry(fs, new Path(root, "_delta_log"), tablePath,
-        snap.version + 1, lines.toSeq,
-        ourRemoves = rewriteByTuple.values.flatten.toSet,
-        dataChangeMutation = false))
+    commitFiles(spark, tablePath, fs, Some(snap), head,
+      rewriteByTuple.values.flatten.toSet, staged, rowIds.nonEmpty,
+      dataChange = false, mutation = false)
   }
 
   // ------------------------------------------------- change data feed
@@ -3442,41 +3426,18 @@ object DeltaLite {
       s""""dataChange":false}}"""
   }
 
-  /** Stage CDF rows (table columns + `_change_type`) as parquet under
-    * `_change_data/` — the same distributed staging as data files, then
-    * one metadata move per file. Returns (relPath, size, pv).
+  /** `cdc` lines for one commit's change rows (the table's logical
+    * columns + `_change_type`): staged in the data files' shape straight
+    * under `_change_data/`.
     */
-  private def stageCdcFiles(spark: SparkSession, df: DataFrame,
-      root: Path, fs: FileSystem, stagePartCols: Seq[String])
-      : Seq[(String, Long, Map[String, Option[String]])] = {
-    val staged: Seq[(String, Long, Map[String, Option[String]])] =
-      if (stagePartCols.isEmpty)
-        stageWithStats(spark, df, root, fs).map { case (n, sz, _) =>
-          (n, sz, Map.empty[String, Option[String]])
-        }
-      else stagePartitionedWithStats(spark, df, root, fs, stagePartCols)
-        .map { case (n, sz, _, pv) => (n, sz, pv) }
-    staged.map { case (rel, sz, pv) =>
-      val dst = new Path(root, s"_change_data/$rel")
-      fs.mkdirs(dst.getParent)
-      require(fs.rename(new Path(root, rel), dst),
-        s"cdc staging move failed for $rel")
-      (s"_change_data/$rel", sz, pv)
-    }
+  private def cdcLines(spark: SparkSession, root: Path, fs: FileSystem,
+      snap: Snapshot, rows: DataFrame, now: Long): Seq[String] = {
+    val (phys, partCols) = physicalFrame(rows, snap.schema,
+      snap.partitionColumns, snap.columnMappingMode != "none",
+      Seq(col("_change_type")))
+    stage(spark, phys, root, fs, partCols, under = "_change_data")
+      .map(f => cdcAction(f.path, f.size, f.partitionValues, now))
   }
-
-  /** [[toPhysical]] plus a verbatim `_change_type` passthrough — the
-    * shape CDF files of a column-mapped table carry.
-    */
-  private def toPhysicalCdc(df: DataFrame, schema: StructType): DataFrame =
-    df.select((schema.fields.map { f =>
-      val c = shapeCast(col(f.name), physicalize(f.dataType))
-      if (f.metadata.contains("delta.columnMapping.id"))
-        c.as(physicalName(f), new org.apache.spark.sql.types.MetadataBuilder()
-          .putLong("parquet.field.id",
-            f.metadata.getLong("delta.columnMapping.id")).build())
-      else c.as(physicalName(f))
-    }.toIndexedSeq :+ col("_change_type")): _*)
 
   /** Parse a JSON partitionValues node (same shape as the replay). */
   private def jsonPartValues(node: JsonNode): Map[String, Option[String]] = {
@@ -3498,8 +3459,9 @@ object DeltaLite {
     * removed files read at the PRIOR version's state — partition
     * values and live DVs included). Returns None — fall back to the
     * keyed snapshot diff — when the table does not enable
-    * `delta.enableChangeDataFeed`, a commit in range is gone/mid-
-    * metadata-change, or a commit mixes a remove+re-add of one path
+    * `delta.enableChangeDataFeed`, a commit in range is gone or
+    * restates metadata that changes how rows decode ([[feedShape]]), or
+    * a commit mixes a remove+re-add of one path
     * without cdc actions (a DV rewrite not derivable from file
     * actions).
     *
@@ -3594,6 +3556,9 @@ object DeltaLite {
           ()
         }
       }
+    // the feed shape as of the last commit read, once a metaData in range
+    // needed it
+    var shape: Option[FeedShape] = None
     (fromVersion + 1 to toVersion).foreach { v =>
       val file = new Path(logDir, f"$v%020d.json")
       if (!fs.exists(file)) return None // cleaned up — not CDF-readable
@@ -3601,12 +3566,23 @@ object DeltaLite {
       val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
       val actions = txt.split("\n").filter(_.trim.nonEmpty)
         .map(mapper.readTree).toSeq
-      // metaData mid-range = schema/config drift → decline (the table
-      // CREATION commit at v0 is vacuous — no earlier data). Protocol
-      // actions never bail: they don't change row decoding, and the
-      // `to`-snapshot already gated unsupported features.
-      if (v != 0 && actions.exists(_.has("metaData")))
-        return None
+      // a metaData mid-range declines only when it changes how rows
+      // decode or turns the feed off ([[feedShape]]); one that records
+      // table state alone (minted row-id column names, an identity
+      // high-water mark) reads through. The table CREATION commit at v0
+      // is vacuous — no earlier data. Protocol actions never bail: they
+      // don't change row decoding, and the `to`-snapshot already gated
+      // unsupported features.
+      actions.filter(_.has("metaData")).lastOption.foreach { a =>
+        val md = parseMetaData(a.get("metaData"))
+        val next = feedShape(md.schema, md.partitionColumns, md.configuration)
+        if (v != 0 && next != shape.getOrElse {
+              val s0 = snapshot(spark, tablePath, Some(v - 1))
+              feedShape(s0.schema, s0.partitionColumns, s0.configuration)
+            })
+          return None
+        shape = Some(next)
+      }
       val cdcs = actions.filter(_.has("cdc")).map(_.get("cdc"))
       if (cdcs.nonEmpty) {
         cdcs.foreach { c =>
@@ -3675,6 +3651,37 @@ object DeltaLite {
           StructField("_commit_version", LongType))))
     else Some(parts.reduce(_ unionByName _)
       .select(outCols.map(col).toIndexedSeq: _*))
+  }
+
+  /** What a table's metadata decides about how its change feed reads:
+    * the schema's names, types and nullability (column-mapping physical
+    * names included; other field metadata, such as an identity column's
+    * high-water mark, left out), the partition columns, the
+    * column-mapping mode, and whether the feed is on.
+    */
+  private final case class FeedShape(schema: DataType,
+      partitionColumns: Seq[String], mappingMode: String, enabled: Boolean)
+
+  private def feedShape(schema: StructType, partCols: Seq[String],
+      conf: Map[String, String]): FeedShape = {
+    val physKey = "delta.columnMapping.physicalName"
+    def strip(dt: DataType): DataType = dt match {
+      case st: StructType => StructType(st.fields.map(f => f.copy(
+        dataType = strip(f.dataType),
+        metadata =
+          if (!f.metadata.contains(physKey))
+            org.apache.spark.sql.types.Metadata.empty
+          else new org.apache.spark.sql.types.MetadataBuilder()
+            .putString(physKey, f.metadata.getString(physKey)).build())))
+      case a: org.apache.spark.sql.types.ArrayType =>
+        a.copy(elementType = strip(a.elementType))
+      case m: org.apache.spark.sql.types.MapType =>
+        m.copy(keyType = strip(m.keyType), valueType = strip(m.valueType))
+      case other => other
+    }
+    FeedShape(strip(schema), partCols,
+      conf.getOrElse("delta.columnMapping.mode", "none"),
+      conf.get("delta.enableChangeDataFeed").exists(_.equalsIgnoreCase("true")))
   }
 
   /** [[changeFeedIfAvailable]], loud when the range is not readable as
@@ -3935,19 +3942,6 @@ object DeltaLite {
     // convention — a brand-new column has no files to resolve) and
     // restates maxColumnId.
     val mapped = existing.exists(_.columnMappingMode != "none")
-    // identity allocation advances the high-water mark — the commit's
-    // metaData restates the schema with the new value
-    def stampHwm(schema: StructType): StructType =
-      if (idHwm.isEmpty) schema
-      else StructType(schema.fields.map { f =>
-        idHwm.get(f.name) match {
-          case Some(h) => f.copy(metadata =
-            new org.apache.spark.sql.types.MetadataBuilder()
-              .withMetadata(f.metadata)
-              .putLong("delta.identity.highWaterMark", h).build())
-          case None => f
-        }
-      })
     val (tableSchema0, evolvedConf): (StructType, Map[String, String]) =
       existing match {
         case Some(s) if mapped && evolving =>
@@ -3975,7 +3969,9 @@ object DeltaLite {
             s.configuration)
         case None => (df1.schema, configuration)
       }
-    val tableSchema = stampHwm(tableSchema0)
+    // identity allocation advances the high-water mark — the commit's
+    // metaData restates the schema with the new value
+    val tableSchema = withIdentityHwm(tableSchema0, idHwm)
     // table properties stamp at CREATION; re-stating values the table
     // already carries is an idempotent no-op (config-driven sinks pass
     // the same options every run), a DIFFERENT value refuses
@@ -3996,22 +3992,10 @@ object DeltaLite {
       extra = generatedChecks(
         existing.map(_.schema).getOrElse(tableSchema), df.columns.toSeq))
     val (stagedDf, stagePartCols) =
-      if (mapped) {
-        val physPart = partCols.map(c => physicalName(
-          tableSchema.fields.find(_.name == c).getOrElse(
-            throw new IllegalArgumentException(
-              s"partition column $c missing from the Delta schema"))))
-        (toPhysical(df1, tableSchema), physPart)
-      } else (df1, partCols)
-    val moved: Seq[(String, Long, String, Map[String, Option[String]])] =
-      if (stagePartCols.isEmpty)
-        stageWithStats(spark, stagedDf, root, fs)
-          .map { case (n, sz, st) => (n, sz, st, Map.empty[String, Option[String]]) }
-      else stagePartitionedWithStats(spark, stagedDf, root, fs,
-        stagePartCols)
+      physicalFrame(df1, tableSchema, partCols, mapped)
+    val staged = stage(spark, stagedDf, root, fs, stagePartCols)
     // staging consumed the identity-filled rows — the pinned batch can go
     idRelease()
-    val version = existing.map(_.version + 1).getOrElse(0L)
     val now = 1L // deterministic timestamps (repo convention)
     // in-commit timestamps: stamped past the head's clock on ICT
     // tables; a CREATION that enables the property starts the clock
@@ -4091,49 +4075,21 @@ object DeltaLite {
       lines += metaDataAction(id, tableSchema, partCols, evolvedConf, now)
     }
     txn.foreach { case (appId, v) => lines += txnAction(appId, v, now) }
-    if (mode == "overwrite") existing.foreach(s => s.files.keys.foreach {
-      p => lines += removeAction(rawPath(s, p), now)
-    })
-    // ROW TRACKING: fresh files allocate contiguous base row ids past
-    // the domain's high-water mark (file i starts where file i-1's
-    // numRecords ended), defaultRowCommitVersion = this commit, and the
-    // domain advances in the SAME commit. The domainMetadata line makes
-    // the commit single-attempt (commitWithRetry refuses its rebase),
-    // so racing writers can never double-allocate an id range.
-    val rowTracked = existing.map(rowTrackingActive).getOrElse(
-      configuration.get("delta.enableRowTracking")
-        .exists(_.equalsIgnoreCase("true")))
-    val rowIdAlloc: Map[String, (Long, Long)] =
-      if (!rowTracked) Map.empty
-      else {
-        def numRecords(st: String): Long =
-          Option(mapper.readTree(st).get("numRecords")).map(_.asLong)
-            .getOrElse(throw new IllegalStateException(
-              "staged stats carry no numRecords — cannot allocate row ids"))
-        var next = existing.map(rowIdHighWaterMark).getOrElse(-1L) + 1
-        val alloc = moved.map { case (name, _, st, _) =>
-          val base = next
-          next += numRecords(st)
-          name -> (base, version)
-        }.toMap
-        lines += rowTrackingDomainAction(next - 1)
-        alloc
-      }
-    moved.foreach { case (name, size, st, pv) =>
-      lines += addAction(name, size, st, now, pv,
-        rowId = rowIdAlloc.get(name))
-    }
     // blind appends rebase over any compatible concurrent commit;
     // overwrite replaces the version-pinned state, so intervening data
     // changes conflict. Create/evolve commits carry metaData and stay
     // single-attempt (commitWithRetry refuses their rebase on a race).
-    autoSyncUniform(spark, tablePath, existing,
-      commitWithRetry(fs, logDir, tablePath, version, lines.toSeq,
-        ourRemoves =
-          if (mode == "overwrite")
-            existing.toSeq.flatMap(_.files.keys).toSet
-          else Set.empty,
-        dataChangeMutation = mode == "overwrite"))
+    commitFiles(spark, tablePath, fs, existing, lines.toSeq,
+      removed =
+        if (mode == "overwrite") existing.toSeq.flatMap(_.files.keys).toSet
+        else Set.empty,
+      staged,
+      // ROW TRACKING: fresh files allocate base row ids past the domain's
+      // high-water mark
+      rowTracked = existing.map(rowTrackingActive).getOrElse(
+        configuration.get("delta.enableRowTracking")
+          .exists(_.equalsIgnoreCase("true"))),
+      mutation = mode == "overwrite")
   }
 
   /** One file-pruning bound: a JSON stats value and a batch-side bound,
@@ -4315,10 +4271,11 @@ object DeltaLite {
     *     schema's default row width fit
     *     `spark.sql.adaptive.advisoryPartitionSizeInBytes`, that file
     *     counts as touched and an unpartitioned table rewrites into one
-    *     file (`coalesce(1)`, no rebalance shuffle) — if it holds none
-    *     of the keys, its rows are re-added unchanged in the same
-    *     commit. Several candidates always probe: most of them may be
-    *     untouched.
+    *     file: the rewrite reaches [[stage]] as a `coalesce(1)`, which
+    *     [[rebalanceForStaging]] leaves alone, so no rebalance shuffle
+    *     runs — if the file holds none of the keys, its rows are re-added
+    *     unchanged in the same commit. Several candidates always probe:
+    *     most of them may be untouched.
     * Untouched files are never read twice nor rewritten; rewrite volume
     * is (touched rows − replaced rows) + batch. Live deletion vectors
     * are honored: scans read through the row_index anti-filter, a
@@ -4429,15 +4386,8 @@ object DeltaLite {
     // files; replaced keys INHERIT the old row's stable id (an update
     // preserves identity, its commit version defaults to this commit);
     // brand-new keys resolve from the add's fresh coordinate range.
-    val rowTracked = rowTrackingActive(snap)
-    val mintedMatCols = rowTracked &&
-      materializedRowIdCols(snap.configuration).isEmpty
-    val (matIdCol, matVerCol) =
-      if (!rowTracked) ("", "")
-      else materializedRowIdCols(snap.configuration).getOrElse {
-        val sfx = java.util.UUID.randomUUID.toString.take(8)
-        (s"_row-id-col-$sfx", s"_row-commit-version-col-$sfx")
-      }
+    val rowIds = rowIdCols(snap)
+    val rowTracked = rowIds.nonEmpty
     txn.foreach { case (appId, v) =>
       if (snap.txns.get(appId).exists(_ >= v)) {
         release(); return snap.version
@@ -4468,11 +4418,6 @@ object DeltaLite {
     // no pre-compact required. Column-mapped tables scan physical and
     // rename back; past the partition union cap the scan is ONE parquet
     // load + a broadcast partition-values join (constant plan size).
-    val mapped = snap.columnMappingMode != "none"
-    val partFieldsU = snap.partitionColumns.map(c =>
-      snap.schema.fields.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(
-          s"partition column $c missing from the Delta schema")))
     def groupScan(
         files: Map[String, Map[String, Option[String]]],
         withIds: Boolean = false): DataFrame =
@@ -4594,80 +4539,31 @@ object DeltaLite {
             retained.unionByName(batchWithIds)
         }
       }
-    val idExtra =
-      if (!rowTracked) Nil
-      else Seq(col("_row_id").as(matIdCol),
-        col("_row_commit_version").as(matVerCol))
-    val statsExcl: Set[String] =
-      if (rowTracked) Set(matIdCol, matVerCol) else Set.empty
-    val outStaged =
-      if (mapped) toPhysical(out, snap.schema, extra = idExtra)
-      else if (rowTracked) out.select(dataColsSel ++ idExtra: _*)
-      else out
-    val stagePartColsU =
-      if (mapped) partFieldsU.map(physicalName) else snap.partitionColumns
-    val moved: Seq[(String, Long, String, Map[String, Option[String]])] =
-      if (snap.partitionColumns.isEmpty)
-        // a small rewrite is one file by construction: coalesce, and
-        // staging adds no rebalance shuffle above the explicit layout
-        stageWithStats(spark,
-          if (small && optimizedWrite(spark)) outStaged.coalesce(1)
-          else outStaged,
-          root, fs, statsExcl)
-          .map { case (n, sz, st) =>
-            (n, sz, st, Map.empty[String, Option[String]])
-          }
-      else stagePartitionedWithStats(spark, outStaged, root, fs,
-        stagePartColsU, statsExcl)
+    val (outStaged, stagePartCols) = physicalFrame(out, snap.schema,
+      snap.partitionColumns, snap.columnMappingMode != "none",
+      rowIds.toSeq.flatMap(_.columns))
+    // a small rewrite is one file by construction: coalesce, and staging
+    // adds no rebalance shuffle above the explicit layout
+    val staged = stage(spark,
+      if (small && stagePartCols.isEmpty && optimizedWrite(spark))
+        outStaged.coalesce(1)
+      else outStaged,
+      root, fs, stagePartCols, rowIds.toSeq.flatMap(_.names))
     val now = 1L
-    val version = snap.version + 1
-    val lines = mutable.ArrayBuffer.empty[String]
-    lines += commitInfoAction("MERGE",
-      Map("matchedPredicates" -> keyCols.mkString(",")), now,
-      if (ictEnabled(snap)) Some(nextIct(fs, logDir, snap)) else None)
     // one metaData restatement covers both metadata advances this
     // commit can make: minted materialized-row-id column names and/or
     // the identity columns' new high-water marks
-    if (mintedMatCols || idHwm.nonEmpty) {
-      val schemaOut =
-        if (idHwm.isEmpty) snap.schema
-        else StructType(snap.schema.fields.map(f =>
-          idHwm.get(f.name) match {
-            case Some(h) => f.copy(metadata =
-              new org.apache.spark.sql.types.MetadataBuilder()
-                .withMetadata(f.metadata)
-                .putLong("delta.identity.highWaterMark", h).build())
-            case None => f
-          }))
-      val confOut = snap.configuration ++
-        (if (mintedMatCols) Map(
-          "delta.rowTracking.materializedRowIdColumnName" -> matIdCol,
-          "delta.rowTracking.materializedRowCommitVersionColumnName" ->
-            matVerCol)
-        else Map.empty)
-      lines += metaDataAction(snap.tableId, schemaOut,
-        snap.partitionColumns, confOut, now)
-    }
-    txn.foreach { case (appId, v) => lines += txnAction(appId, v, now) }
-    touched.toSeq.sorted.foreach(p =>
-      lines += removeAction(rawPath(snap, p), now))
-    var nextRid = if (rowTracked) rowIdHighWaterMark(snap) + 1 else 0L
-    moved.foreach { case (name, size, st, pvv) =>
-      val rid = if (!rowTracked) None else {
-        val rows = Option(mapper.readTree(st).get("numRecords"))
-          .map(_.asLong).getOrElse(0L)
-        val b = nextRid; nextRid += rows
-        Some((b, version))
-      }
-      lines += addAction(name, size, st, now, pvv, rowId = rid)
-    }
-    if (rowTracked) lines += rowTrackingDomainAction(nextRid - 1)
+    val head = (commitInfoAction("MERGE",
+      Map("matchedPredicates" -> keyCols.mkString(",")), now,
+      if (ictEnabled(snap)) Some(nextIct(fs, logDir, snap)) else None) +:
+      rewriteMetaData(snap, rowIds, idHwm, now).toSeq) ++
+      txn.map { case (appId, v) => txnAction(appId, v, now) }
     // CHANGE DATA FEED: exact per-row MERGE effects as `cdc` files —
     // update_preimage/update_postimage for replaced keys, insert for
     // brand-new keys, delete for deleteKeys matches. Key-level
     // classification is one more semi/anti join over the touched
     // files' rows (CDF materializes changes by definition).
-    if (cdfEnabled(snap)) {
+    val cdc = if (!cdfEnabled(snap)) Nil else {
       val dataCols = snap.schema.fieldNames.map(col).toIndexedSeq
       // identity-filled batch — cdc images carry the ids actually written
       val batchSel = batchF.select(dataCols: _*)
@@ -4690,19 +4586,15 @@ object DeltaLite {
         case Some(ok) => batchSel.join(ok, keyCols, "left_anti")
         case None => batchSel
       }).withColumn("_change_type", lit("insert"))
-      val cdcRows0 = (pre.toSeq ++ dels.toSeq ++ post.toSeq :+ ins)
-        .reduce(_ unionByName _)
-      val cdcRows =
-        if (mapped) toPhysicalCdc(cdcRows0, snap.schema) else cdcRows0
-      stageCdcFiles(spark, cdcRows, root, fs, stagePartColsU).foreach {
-        case (rel, sz, pv) => lines += cdcAction(rel, sz, pv, now)
-      }
+      cdcLines(spark, root, fs, snap,
+        (pre.toSeq ++ dels.toSeq ++ post.toSeq :+ ins).reduce(_ unionByName _),
+        now)
     }
-    val committed = commitWithRetry(fs, logDir, tablePath, version,
-      lines.toSeq, ourRemoves = touched, dataChangeMutation = true)
+    val committed = commitFiles(spark, tablePath, fs, Some(snap), head,
+      touched, staged, rowTracked, cdc)
     idRelease()
     release()
-    autoSyncUniform(spark, tablePath, Some(snap), committed)
+    committed
   }
 
   /** Upgrade an unmapped table to column mapping `name` mode — the

@@ -612,8 +612,8 @@ class DeltaLiteSpec extends AnyFunSuite {
       (1L to 19L by 2L).map(k => (k, s"v$k")).toDF("k", "v").coalesce(1), t,
       configuration = Map("delta.enableChangeDataFeed" -> "true",
         "delta.enableRowTracking" -> "true"))
-    // the first MERGE mints the materialized row-id columns in a
-    // metaData action, which the change feed declines to read across
+    // the first MERGE mints the materialized row-id columns, so the
+    // MERGE under test rewrites a file that already carries them
     DeltaLite.upsert(spark, Seq((1L, "v1")).toDF("k", "v"), t, Seq("k"))
     DeltaLite.deleteWhere(spark, t, col("k") === 5L)
     val before = DeltaLite.snapshot(spark, t)
@@ -650,6 +650,99 @@ class DeltaLiteSpec extends AnyFunSuite {
     assert(idsBefore.forall { case (k, id) => idsAfter.get(k).contains(id) },
       s"retained rows must keep their row ids: $idsBefore vs $idsAfter")
     assert(idsAfter.values.toSet.size == idsAfter.size, idsAfter)
+  }
+
+  test("the first MERGE into a row-tracked CDF table reads as a change " +
+      "feed; a metaData that changes the schema still declines") {
+    val t = java.nio.file.Files.createTempDirectory("delta_cdfrowids")
+      .toString + "/tbl"
+    DeltaLite.write(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t,
+      configuration = Map("delta.enableChangeDataFeed" -> "true",
+        "delta.enableRowTracking" -> "true"))
+    // v1 restates metaData only to record the minted row-id column names
+    val v1 = DeltaLite.upsert(spark,
+      Seq((1L, "A"), (3L, "c")).toDF("k", "v"), t, Seq("k"))
+    assert(DeltaLite.snapshot(spark, t).configuration
+      .contains("delta.rowTracking.materializedRowIdColumnName"))
+    val feed = DeltaLite.changeFeed(spark, t, 0, v1)
+      .select("k", "v", "_change_type", "_commit_version")
+      .as[(Long, String, String, Long)].collect().toSet
+    assert(feed == Set((1L, "a", "update_preimage", 1L),
+      (1L, "A", "update_postimage", 1L), (3L, "c", "insert", 1L)), feed)
+    // an append that adds a column changes how the range's rows decode
+    val v2 = DeltaLite.write(spark,
+      Seq((4L, "d", 1)).toDF("k", "v", "n"), t)
+    assert(DeltaLite.changeFeedIfAvailable(spark, t, v1, v2).isEmpty)
+    assert(DeltaLite.changeFeedIfAvailable(spark, t, 0, v2).isEmpty)
+  }
+
+  test("no commit kind leaves a stage directory or a parquet file the " +
+      "log does not name: write, upsert, DV and copy-on-write delete and " +
+      "compact on a partitioned CDF + row-tracked table") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("delta_hygiene")
+    val t = dir.resolve("tbl").toString
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def check(kind: String): Unit = {
+      val stages = new java.io.File(dir.toString).list()
+        .filter(_.startsWith("tbl_stage_"))
+      assert(stages.isEmpty, s"$kind left ${stages.mkString(", ")}")
+      val actions = fs(t).listStatus(new Path(t, "_delta_log"))
+        .map(_.getPath.toString).filter(_.endsWith(".json")).toSeq
+        .flatMap { p =>
+          val src = scala.io.Source.fromURI(new java.net.URI(p))
+          try src.getLines().toList finally src.close()
+        }.map(mapper.readTree)
+      def paths(action: String): Set[String] = actions
+        .filter(_.has(action))
+        .map(a => DeltaLite.decodePath(a.get(action).get("path").asText))
+        .toSet
+      val cdc = paths("cdc")
+      assert(cdc.forall(_.startsWith("_change_data/")), s"$kind: $cdc")
+      assert(!paths("add").exists(_.startsWith("_change_data/")), kind)
+      val root = java.nio.file.Paths.get(t)
+      val parquet = java.nio.file.Files.walk(root).iterator.asScala
+        .map(root.relativize(_).toString)
+        .filter(p => p.endsWith(".parquet") && !p.startsWith("_delta_log"))
+        .toSet
+      val stray = parquet -- paths("add") -- paths("remove") -- cdc
+      assert(stray.isEmpty, s"$kind left files no action names: $stray")
+    }
+    def rows(ks: Seq[Long], tag: String): DataFrame =
+      ks.map(k => (k, s"$tag$k", if (k % 2 == 0) "even" else "odd"))
+        .toDF("k", "v", "r")
+    DeltaLite.write(spark, rows(1L to 8L, "a"), t, partitionBy = Seq("r"),
+      configuration = Map("delta.enableChangeDataFeed" -> "true",
+        "delta.enableRowTracking" -> "true"))
+    check("create")
+    DeltaLite.write(spark, rows(9L to 12L, "b"), t)
+    check("append")
+    DeltaLite.write(spark, rows(1L to 12L, "c"), t, "overwrite")
+    check("overwrite")
+    // key 1 lies only in the odd file's stats range: one candidate
+    DeltaLite.upsert(spark, rows(Seq(1L), "d"), t, Seq("k"))
+    check("small upsert")
+    withAdvisoryBytes(1)(
+      DeltaLite.upsert(spark, rows(Seq(2L, 3L, 14L), "e"), t, Seq("k")))
+    check("large upsert")
+    DeltaLite.deleteWhere(spark, t, col("k") === 5L)
+    assert(DeltaLite.snapshot(spark, t).dvs.nonEmpty)
+    check("deletion-vector delete")
+    DeltaLite.compact(spark, t)
+    assert(DeltaLite.snapshot(spark, t).dvs.isEmpty)
+    check("compact")
+    DeltaLite.enableColumnMapping(spark, t)
+    DeltaLite.setTableProperties(spark, t,
+      Map("delta.enableIcebergCompatV2" -> "true"))
+    DeltaLite.deleteWhere(spark, t, col("k") === 7L)
+    check("copy-on-write delete")
+    DeltaLite.upsert(spark, rows(Seq(9L, 15L), "f"), t, Seq("k"))
+    check("column-mapped upsert")
+    val want = (1L to 12L).map(k => k -> s"c$k").toMap ++
+      Map(1L -> "d1", 2L -> "e2", 3L -> "e3", 14L -> "e14", 9L -> "f9",
+        15L -> "f15") -- Seq(5L, 7L)
+    assert(DeltaLite.read(spark, t).select("k", "v").as[(Long, String)]
+      .collect().toMap == want)
   }
 
   test("keyed-sink contract through the collapse-observed stats: a null " +

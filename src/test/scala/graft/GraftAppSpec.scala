@@ -563,6 +563,29 @@ class GraftAppSpec extends AnyFunSuite {
     assert(e1.getMessage.contains("contract changed"))
   }
 
+  test("run analyzes the config once: the lock check and the run share " +
+      "one plan") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_runonce")
+    java.nio.file.Files.writeString(tmp.resolve("in.csv"), "a,b\n1,x\n2,y\n")
+    // csv schema inference runs Spark jobs each time the source loads
+    val config = GraftConfig(
+      sources = Seq(SourceConf("src", s"$tmp/in.csv", format = "csv",
+        options = Map("header" -> "true", "inferSchema" -> "true"))),
+      sql = "SELECT a, b INTO o FROM src",
+      sinks = Seq(SinkConf("o", s"$tmp/out", mode = "overwrite")))
+    val lock = tmp.resolve("graft.lock")
+    assert(org.apache.spark.graft.JobCount(spark)(
+      GraftApp.build(spark, config)).jobs > 0)
+    val batch = org.apache.spark.graft.JobCount(spark)(
+      GraftApp.runBatch(spark, config)).jobs
+    val run = org.apache.spark.graft.JobCount(spark)(
+      GraftApp.run(spark, config, lock, locked = false)).jobs
+    assert(run == batch, s"run started $run jobs, a batch run $batch")
+    assert(new String(java.nio.file.Files.readAllBytes(lock))
+      .contains("output o struct<a:int,b:string>"))
+    assert(spark.read.parquet(s"$tmp/out").count() == 2)
+  }
+
   test("dot renders the pipeline DAG with direct-dependency edges only") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_dot").toString
     val yaml =
